@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Headline benchmark: runs QueryDefs.benchNames (one representative
   * query per operator family) on SPARK_GRAFT_SF_DIR and prints ONE JSON
   * line {"metric":...,"queries":{name:sec,...}}. Each query is forced
-  * with count() — full plan execution, no display shortcuts. */
+  * through its own physical plan — full plan execution, no display
+  * shortcuts. A lane whose first run looks up the served-artifact memo
+  * (QueryDefs.memo) gets that run as an unmeasured warm-up; no lane is
+  * treated differently because of its name. */
 object Bench {
   // 1-min loadavg sampled at entry and at report time: the r10 bench
   // recorded 2-3x medians on UNCHANGED code (isolated re-runs matched
@@ -88,26 +91,23 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
-    // Served/snapshot lanes deliberately pay their artifact build on
-    // rep 1 (the build cost is benched separately — q6_snapshot_build
-    // etc.), which made their SPREADS meaningless ([0.77, 17.3] around
-    // a 0.79 median in r13). They now get one UNMEASURED build rep —
-    // the session-level warm-up pattern applied per-lane (r13 verdict
-    // #6) — so every measured rep is the warm serve; the build second
-    // count stays visible in "warmup_sec".
-    def servedWarmup(name: String): Boolean =
-      name.endsWith("_served") || name == "s12_response_cache" ||
-        name == "s11_tree_refresh"
-
     case class Lane(med: Double, secs: Vector[Double],
                     err: Option[String], maxLoad: Double,
                     gc: Vector[Double], warmSec: Double,
                     tree: Vector[Map[String, Double]])
+    case class Rep(sec: Double, gc: Double, load: Double,
+                   tree: Map[String, Double])
 
-    /** One lane measurement: `reps` forced executions (plus one
-      * unmeasured warm-up for served lanes) with per-rep seconds, GC
-      * delta, worst 1-min loadavg, and — for the s11 tree lanes — the
-      * per-rep sub-component timings Pipeline publishes. The load
+    /** One lane measurement: `reps` forced executions with per-rep
+      * seconds, GC delta, worst 1-min loadavg, and the sub-component
+      * timings of every rep that wrote a dataset tree. A lane whose
+      * first run looked up the served-artifact memo (QueryDefs.memo)
+      * paid that artifact's build there, so that run is an unmeasured
+      * warm-up, reported in "warmup_sec", and `reps` measured runs
+      * follow; the build cost is benched by its own lanes
+      * (q6_snapshot_build etc.), and left in rep 1 it made served
+      * spreads meaningless ([0.77, 17.3] around a 0.79 median in r13).
+      * Any other lane's first run is its first measured rep. The load
       * column is what makes the artifact adjudicable: r11 AND r12
       * both shipped medians smeared by external box load that only a
       * postmortem could see — every lane carries the worst load any
@@ -116,14 +116,15 @@ object Bench {
     def measure(name: String): Lane = {
       val fn = SparkEntry.queries(name)
       var err: Option[String] = None
-      var maxLoad = load1m
+      val load0 = load1m
       // force via the lane's OWN optimized plan (toRdd), not a bare
       // count(): Catalyst legally deletes work under count — e.g. a
       // left join to a unique-keyed right side with no referenced
       // columns vanishes, and with it everything feeding it
-      // (CountPruneProbe found 10 benched lanes under-measured this
-      // way; worst case s12: 6 joins benched as 1). toRdd executes
-      // every operator the lane declares and counts result rows.
+      // (10 benched lanes were under-measured this way — COVERAGE.md,
+      // CountPruneProbe; worst case s12: 6 joins benched as 1). toRdd
+      // executes every operator the lane declares and counts result
+      // rows.
       def run(): Unit =
         err = try { fn(spark, sfDir).queryExecution.toRdd.count(); None }
         catch {
@@ -133,26 +134,28 @@ object Bench {
           case scala.util.control.NonFatal(e) =>
             Some(Option(e.getMessage).getOrElse(e.getClass.getName))
         }
-      val warmSec = if (!servedWarmup(name)) -1.0 else {
-        val t0 = System.nanoTime(); run()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val gcs = Vector.newBuilder[Double]
-      val trees = Vector.newBuilder[Map[String, Double]]
-      val secs = (1 to reps).iterator.takeWhile(_ => err.isEmpty).map { _ =>
+      // only Pipeline.writeDatasetTree sets lastTreeTimings, so it is
+      // cleared first: a rep that wrote no tree records none
+      def rep(): Rep = {
+        graft.core.Pipeline.lastTreeTimings = Map.empty
         val t0 = System.nanoTime()
         val gc0 = gcMillis
         run()
-        gcs += (gcMillis - gc0) / 1e3
-        if (name.startsWith("s11_tree"))
-          trees += graft.core.Pipeline.lastTreeTimings
-        maxLoad = math.max(maxLoad, load1m)
-        (System.nanoTime() - t0) / 1e9
-      }.toVector
+        Rep((System.nanoTime() - t0) / 1e9, (gcMillis - gc0) / 1e3, load1m,
+          graft.core.Pipeline.lastTreeTimings)
+      }
+      val lookups0 = QueryDefs.memoLookups
+      val first = rep()
+      val served = QueryDefs.memoLookups > lookups0
+      val rs = (if (served) Vector.empty else Vector(first)) ++
+        Iterator.continually(()).take(if (served) reps else reps - 1)
+          .takeWhile(_ => err.isEmpty).map(_ => rep()).toVector
+      val secs = rs.map(_.sec)
       val med = if (err.isDefined) -1.0
         else secs.sorted.apply((secs.size - 1) / 2)
-      Lane(med, if (err.isDefined) Vector.empty else secs, err, maxLoad,
-        gcs.result(), warmSec, trees.result())
+      Lane(med, if (err.isDefined) Vector.empty else secs, err,
+        (load0 +: rs.map(_.load)).max, rs.map(_.gc),
+        if (served) first.sec else -1.0, rs.map(_.tree).filter(_.nonEmpty))
     }
 
     val firstPass = names.map(n => n -> measure(n))
@@ -254,8 +257,9 @@ object Bench {
     val overGate = results.count(_._2.maxLoad > rerunGate)
     // postmortem columns (file artifact only): per-rep GC seconds —
     // an outlier rep with matching GC delta is named, not mysterious —
-    // the served lanes' unmeasured build second, and the s11 lanes'
-    // per-rep sub-component timings (render vs write attribution)
+    // the memo lanes' unmeasured warm-up second, and the per-rep
+    // sub-component timings of reps that wrote a dataset tree (render
+    // vs write attribution)
     val laneGc = results.collect {
       case (k, v) if v.gc.nonEmpty =>
         jstr(k) + ":" + v.gc.map(sec).mkString("[", ",", "]") }

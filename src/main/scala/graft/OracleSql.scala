@@ -1300,7 +1300,7 @@ FROM ($outer) mu""")
     * runs >40× slower — measured, rejected). 448 is 37× the 12-round
     * gate lane and already deep into one-job-per-merge-is-not-a-plan
     * territory for the relational regime; the 32k-merge evidence
-    * beyond the oracle's reach stays with BpeScaleProbe. */
+    * beyond the oracle's reach is BpeScaleProbe's (COVERAGE.md). */
   private val Bpe448Rounds = 448
 
   /** The [[Bpe448Rounds]]-merge BPE replay over the trigram-derived
@@ -3424,8 +3424,8 @@ FROM members""",
     // hamming 1-2 — band-verified near-equal, so they pair too (an
     // exact-equality matcher misses them and fails this gate); for
     // d % 91 = 0 the two plants also pair with each other. Distinct
-    // videos' frames sit >= hamming 5 apart (HamProbe) — no false
-    // pairs at threshold 2.
+    // videos' frames sit >= hamming 5 apart (HamProbe, COVERAGE.md) —
+    // no false pairs at threshold 2.
     "m7_video_neardup" -> raw"""
 WITH s AS (SELECT max(doc_id) + 1 AS v FROM documents)
 SELECT doc_id AS media_a, doc_id + (SELECT v FROM s) AS media_b,

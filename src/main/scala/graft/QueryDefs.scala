@@ -60,17 +60,18 @@ object QueryDefs {
         e.filter(splitK === 9))
     }),
     // ...and the SERVED twin: the standing labeling memoized across
-    // calls (bandIndexServed lifecycle), so the median measures the
-    // FOLD alone — batch-label resolution + contracted CC + relabel —
-    // the per-batch cost a maintained deployment actually pays
+    // calls (bandIndexServed lifecycle; connectedComponents returns an
+    // eagerly-checkpointed frame, so the memo holds concrete blocks,
+    // not a lineage), so the median measures the FOLD alone —
+    // batch-label resolution + contracted CC + relabel — the per-batch
+    // cost a maintained deployment actually pays
     "a6_components_inc_served" -> ((s, d) => {
       val e = thin(s, d)
       val splitK = pmod(conv(substring(
         md5(concat(col("src"), lit("|"), col("dst"))), 1, 8), 16, 10)
         .cast("long"), lit(10L))
       GraphOps.incrementalComponents(
-        standingLabelsCache.getOrElseUpdate(
-          s"${System.identityHashCode(s)}@$d",
+        memo("standing_labels", s, d)(
           GraphOps.connectedComponents(e.filter(splitK =!= 9))),
         e.filter(splitK === 9))
     }),
@@ -288,8 +289,9 @@ object QueryDefs {
     // persisted inverted name index, opened once per dataset (memoized
     // below), then Q2→J10→Q6 served from the pinned frames. Pinned to
     // the SAME oracle as q6_search_subnet — snapshot-served must be
-    // row-identical to rebuilt-served. As a bench lane, rep 1 pays the
-    // build+open, the median reflects the warm serve.
+    // row-identical to rebuilt-served. As a bench lane, the unmeasured
+    // warm-up run pays the build+open, the median reflects the warm
+    // serve.
     "q6_search_served" -> ((s, d) =>
       Serving.geneSearch(servedDataset(s, d), "S7").nodes),
     // the served Q5 RANGE form: Serving.search routes the range query
@@ -449,56 +451,64 @@ object QueryDefs {
       sub.edges.select("src", "dst"))
   }
 
-  /** Per-(session, sfDir) memo of the opened serving snapshot: the
-    * build+open cost is paid once; every subsequent q6_search_served
-    * call (later bench reps, repeated interactive queries) serves from
-    * the pinned frames — the deployment shape, where the snapshot
-    * outlives requests. */
-  private val servedCache =
-    new scala.collection.concurrent.TrieMap[String, Serving.ServedDataset]
+  /** The served-artifact memo: one artifact per (session, kind, sfDir),
+    * built on the first lookup and kept for the JVM's lifetime — the
+    * deployment shape, where a snapshot or index outlives the requests
+    * it serves. The session object itself is in the key, and
+    * SparkSession overrides neither equals nor hashCode, so two live
+    * sessions never share an artifact. Keys are held strongly: every
+    * cached DataFrame holds its session, so a weak key would never
+    * clear. Each lookup, hit or miss, counts in [[memoLookups]];
+    * graft.Bench leaves a lane's first run unmeasured exactly when
+    * that run looked up the memo. */
+  private val memoStore = new scala.collection.concurrent.TrieMap[
+    (SparkSession, String, String), Any]
+  private val memoLookupCount = new java.util.concurrent.atomic.AtomicLong
+
+  private[graft] def memoLookups: Long = memoLookupCount.get
+
+  private[graft] def memo[A](kind: String, s: SparkSession, d: String)(
+      build: => A): A = {
+    memoLookupCount.incrementAndGet()
+    memoStore.getOrElseUpdate((s, kind, d), build).asInstanceOf[A]
+  }
+
+  /** The opened serving snapshot: the build+open cost is paid once;
+    * every later q6_search_served call serves from the pinned frames. */
   private def servedDataset(s: SparkSession, d: String)
       : Serving.ServedDataset =
-    servedCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("served", s, d) {
       val dir = scratchDir("graft_serving")
       Serving.buildSnapshot(verts(s, d), simplified(s, d), dir)
       Serving.open(s, dir)
-    })
+    }
 
-  /** Per-(session, sfDir) memo of the chromosome-partitioned snapshot
-    * (same lifecycle as [[servedDataset]]: built once, served lazily —
-    * nothing pinned, requests read their pruned partitions). */
-  private val partSnapCache =
-    new scala.collection.concurrent.TrieMap[String, Serving.PartitionedSnapshot]
+  /** The chromosome-partitioned snapshot: built once, served lazily —
+    * nothing pinned, requests read their pruned partitions. */
   private def partitionedSnapshot(s: SparkSession, d: String)
       : Serving.PartitionedSnapshot =
-    partSnapCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("served_part", s, d) {
       val dir = scratchDir("graft_serving_part")
       Serving.buildSnapshotPartitioned(verts(s, d), simplified(s, d), dir)
       Serving.openPartitioned(s, dir)
-    })
+    }
 
-  /** Per-(session, sfDir) memo of the 2000-cap NN-Descent graph —
-    * the serving lifecycle of the ANN index ([[servedDataset]]
-    * precedent): rep 1 of the s8_graph_served bench lane pays the
-    * build, the median shows the warm beam serve. Production
-    * amortizes the index across arbitrarily many queries; the
-    * rebuild-per-call s8_graph_search lane is the bench's
-    * cold shape, not the architecture's. */
-  private val knnGraphCache =
-    new scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]
-  private def knnGraphServed(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    knnGraphCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d",
+  /** The 2000-cap NN-Descent graph, the serving lifecycle of the ANN
+    * index: s8_graph_served measures the warm beam serve, while the
+    * rebuild-per-call s8_graph_search lane is the cold shape. */
+  private def knnGraphServed(s: SparkSession, d: String): DataFrame =
+    memo("knn_graph", s, d) {
       Similarity.knnGraphNNDescent(
           table(s, d, "embeddings").filter(col("vec_id") < 2000))
-        .localCheckpoint(eager = true))
+        .localCheckpoint(eager = true)
+    }
 
-  /** Lane-scratch temp dir with CLEANUP (ADVICE r11: the served caches
-    * and stream lanes leaked one temp tree per invocation): every dir
-    * created here is recursively deleted on JVM exit, so repeated
-    * gate/bench runs stop accumulating unbounded /tmp garbage. In-run
-    * lifetime is unchanged — the served caches are per-(session, dir)
-    * memos, so a dir lives as long as the frames reading it. */
+  /** Lane-scratch temp dir with CLEANUP (ADVICE r11: the served
+    * artifacts and stream lanes leaked one temp tree per invocation):
+    * every dir created here is recursively deleted on JVM exit, so
+    * repeated gate/bench runs stop accumulating unbounded /tmp
+    * garbage. In-run lifetime is unchanged — a served artifact lives in
+    * the memo for the JVM's lifetime, and so does its dir. */
   private[graft] def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
@@ -561,14 +571,11 @@ object QueryDefs {
   }
 
   /** Persisted rag artifacts (chunk frame, chunk embeddings, kNN
-    * graph) for the rag_served warm twin — the [[bm25IndexServed]]
-    * lifecycle: built and written once per (session, sfDir), every
+    * graph) for the rag_served warm twin: built and written once, every
     * serve call reopens the parquet snapshots. */
-  private val ragCache = new scala.collection.concurrent.TrieMap[
-    String, (DataFrame, DataFrame, DataFrame)]
   private def ragArtifactsServed(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) =
-    ragCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("rag", s, d) {
       val dir = scratchDir("graft_rag")
       val (cid, vecs, g) = ragBuild(s, d)
       cid.write.parquet(s"$dir/chunks")
@@ -576,102 +583,72 @@ object QueryDefs {
       g.write.parquet(s"$dir/graph")
       (s.read.parquet(s"$dir/chunks"), s.read.parquet(s"$dir/vecs"),
         s.read.parquet(s"$dir/graph"))
-    })
+    }
 
-  /** Per-(session, sfDir) memo of the persisted LABELED IVF index —
-    * the filtered-ANN serving lifecycle ([[knnGraphServed]] /
-    * [[bm25IndexServed]] precedent): the attribute-carrying assigned
+  /** The persisted LABELED IVF index: the attribute-carrying assigned
     * frame is written once and reopened from parquet; the
     * s13_filtered_served lane runs only the search stage over it. */
-  private val filteredIvfCache =
-    new scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]
-  private def filteredIvfServed(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    filteredIvfCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+  private def filteredIvfServed(s: SparkSession, d: String): DataFrame =
+    memo("filtered_ivf", s, d) {
       val emb = table(s, d, "embeddings")
       val dir = scratchDir("graft_ivf_attr")
       Similarity.writeIvfIndex(
         Similarity.ivfAssignAttr(emb, Similarity.codebook(emb, 16)), dir)
       Similarity.readIvfIndex(s, dir)
-    })
+    }
 
   /** The centroid-PARTITIONED labeled index (one directory per coarse
     * bucket): the s13_filtered_served_pruned lane's scan lists only
     * the probed buckets' directories ([[partitionedSnapshot]]
     * precedent for the ANN leg). */
-  private val filteredIvfPartCache =
-    new scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]
-  private def filteredIvfPartServed(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    filteredIvfPartCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+  private def filteredIvfPartServed(s: SparkSession, d: String): DataFrame =
+    memo("filtered_ivf_part", s, d) {
       val emb = table(s, d, "embeddings")
       val dir = scratchDir("graft_ivf_attr_part")
       Similarity.writeIvfIndexPartitioned(
         Similarity.ivfAssignAttr(emb, Similarity.codebook(emb, 16)), dir)
       s.read.parquet(dir)
-    })
+    }
 
-  /** Per-(session, sfDir) memo of the persisted BM25 postings index —
-    * the retrieval stack's serving lifecycle ([[servedDataset]] /
-    * [[knnGraphServed]] precedent): rep 1 of the r1_bm25_served bench
-    * lane pays the build+write, the median is the postings-scan serve
-    * over the reopened snapshot. */
-  private val bm25IndexCache =
-    new scala.collection.concurrent.TrieMap[String, Retrieval.Bm25Index]
+  /** The persisted BM25 postings index: r1_bm25_served measures the
+    * postings-scan serve over the reopened snapshot. */
   private def bm25IndexServed(s: SparkSession, d: String)
       : Retrieval.Bm25Index =
-    bm25IndexCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("bm25", s, d) {
       val dir = scratchDir("graft_bm25")
       Retrieval.writeBm25Index(table(s, d, "documents"), dir)
       Retrieval.openBm25Index(s, dir)
-    })
+    }
 
-  /** Persisted BPE-vocabulary snapshot for the t16 served twin (same
-    * lifecycle as [[bm25IndexServed]]): rep 1 of the bench lane pays
-    * the 12-round train+write, the median is the one-join tokenize
-    * over the reopened vocab. */
-  private val bpeVocabCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
+  /** Persisted BPE-vocabulary snapshot for the t16 served twin: the
+    * 12-round train+write is paid once, the serve is the one-join
+    * tokenize over the reopened vocab. */
   private def bpeVocabServed(s: SparkSession, d: String): DataFrame =
-    bpeVocabCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("bpe_vocab", s, d) {
       val dir = scratchDir("graft_bpe")
       TextOps.writeBpeVocab(table(s, d, "documents"), dir)
       TextOps.openBpeVocab(s, dir)
-    })
+    }
 
-  /** Standing-corpus band-index snapshot for the d12 served twin
-    * (same lifecycle as [[bm25IndexServed]]): rep 1 of the bench lane
-    * pays the standing index build+write, the median is the
-    * batch-probe serve over the reopened snapshot. */
-  private val bandIndexCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
-
-  /** Standing CC labeling for the a6 incremental served twin —
-    * connectedComponents returns an eagerly-checkpointed frame, so
-    * the cached value is concrete blocks, not a lineage. */
-  private val standingLabelsCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
+  /** Standing-corpus band-index snapshot for the d12 served twin: the
+    * serve is the batch probe over the reopened snapshot. */
   private def bandIndexServed(s: SparkSession, d: String): DataFrame =
-    bandIndexCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("band_index", s, d) {
       val dir = scratchDir("graft_bands")
       Dedup.writeBandIndex(
         table(s, d, "documents").filter(col("doc_id") % 10 =!= 9), dir)
       Dedup.openBandIndex(s, dir)
-    })
+    }
 
   /** Standing per-gram count index snapshot for the d16 ingest served
-    * twin (same lifecycle as [[bandIndexServed]]): rep 1 pays the
-    * standing gram scan + write, the serve is the batch probe over
-    * the reopened snapshot. */
-  private val gramIndexCache =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
+    * twin: the serve is the batch probe over the reopened snapshot. */
   private def gramIndexServed(s: SparkSession, d: String): DataFrame =
-    gramIndexCache.getOrElseUpdate(s"${System.identityHashCode(s)}@$d", {
+    memo("gram_index", s, d) {
       val dir = scratchDir("graft_grams")
       Dedup.writeGramIndex(
         table(s, d, "documents").filter(col("doc_id") % 10 =!= 9), dir)
       Dedup.readGramIndex(s, dir)
-    })
+    }
 
   /** The s11 tree-write body, parameterized by the document-writer
     * regime. The listing reports LOGICAL tree files: the distributed
@@ -929,8 +906,8 @@ object QueryDefs {
       // inlines into every downstream expression (filter + both join
       // sides of the topK), multiplying its interpreted cost; at
       // scale embeddings are computed once and persisted, never
-      // re-derived per consumer (T14Probe: topK 3.4 s inlined vs
-      // 0.33 s materialized on the same 2000 vectors).
+      // re-derived per consumer (T14Probe, COVERAGE.md: topK 3.4 s
+      // inlined vs 0.33 s materialized on the same 2000 vectors).
       // positive-norm guard mirrors the oracle's HAVING: a zero vector
       // (bigram-less doc, or full sign cancellation) has no cosine
       val emb = TextOps.hashEmbed(docs).localCheckpoint(eager = true)
@@ -942,7 +919,7 @@ object QueryDefs {
     }),
     // r1 SERVED: BM25 over the persisted postings snapshot — the
     // serving layer's warm path (the reference's saved-cache model,
-    // search_query.R:14): rep 1 of the bench lane pays the index
+    // search_query.R:14): the bench's warm-up run pays the index
     // build+write, the median is the postings-scan serve. SAME oracle
     // as r1_bm25 (identical ranking arithmetic over identical frames).
     "r1_bm25_served" -> ((s, d) => {
@@ -980,7 +957,7 @@ object QueryDefs {
       ragServe(cid, vecs, g)
     }),
     // the WARM twin: chunk frame + embeddings + kNN graph persisted
-    // once (rep 1 of the bench lane), the serve is beam search + MMR
+    // once (the bench's warm-up run), the serve is beam search + MMR
     // + provenance join over the reopened artifacts — the reference's
     // cache-serving model (backend.py:66-99) applied to the flagship
     // composition; SAME oracle as rag_retrieve (r11 verdict #5)
@@ -998,7 +975,7 @@ object QueryDefs {
     // recall regression below target fails the hash gate at sf1
     // scale, closing the "at-scale proof is a probe, not a pinned
     // entry" gap (r10 verdict Missing #1). Uncapped-corpus serving
-    // parameters (RecallProbe-measured): the DEFAULT graph degree 10
+    // parameters (RecallProbe, COVERAGE.md): the DEFAULT graph degree 10
     // measures recall 0.275 at 20k isotropic vectors — distance
     // concentration starves the beam — while degree-20 edges +
     // beam 40 measure 0.710 (sf0.01: 1.000, sf0.1: 0.980), a 2.4x
@@ -1075,7 +1052,7 @@ object QueryDefs {
         .withColumn("rank", col("rank").cast("long"))
     }),
     // s13 SERVED: the search stage over the PERSISTED labeled index
-    // (rep 1 of a bench would pay assign+write; every call here reads
+    // (the bench's warm-up run pays assign+write; every call here reads
     // the reopened parquet snapshot) — same oracle as the cold lane
     // verbatim: a reopened index must be row-identical to a fresh one
     "s13_filtered_served" -> ((s, d) => {
@@ -1345,7 +1322,7 @@ object QueryDefs {
     // 448 is the DuckDB binder-depth ceiling (OracleSql.Bpe448Rounds),
     // 37x the gate lane and far past where the one-job-per-merge
     // relational regime stops being a plan; the 32k-merge evidence
-    // stays with BpeScaleProbe.
+    // is BpeScaleProbe's (COVERAGE.md).
     "t16_bpe_train_448" -> ((s, d) =>
       TextOps.bpeTrain(TextOps.trigramDocs(table(s, d, "documents")),
         rounds = 448)),
@@ -1877,7 +1854,7 @@ object QueryDefs {
       // maxHamming=2: the fixture's planted copies land at EXACTLY 0
       // (cell contrast >= 14 vs +/-3 noise), while the nearest random
       // pair measured over the 57k-image sf1 corpus sits at hamming 5
-      // (graft.HamProbe: 5:2, 6:1, 7:5, 8:10 — gradient bits are
+      // (HamProbe, COVERAGE.md: 5:2, 6:1, 7:5, 8:10 — gradient bits are
       // correlated, so the tail is fatter than iid) — threshold 2
       // keeps a 3-flip margin on both sides at every SF
       Multimodal.phashNearDup(base.unionByName(planted), maxHamming = 2)
@@ -2107,7 +2084,7 @@ object QueryDefs {
     "d9_block_dedup", "d10_cdc_dedup", "s5_sq8_rerank",
     "t13_bloom_decontaminate",
     // round-9 additions: real perceptual near-dup + the snapshot-served
-    // interactive search path (rep 1 builds the snapshot, the median
+    // interactive search path (the warm-up builds the snapshot, the median
     // shows the warm serve)
     "m6_phash_neardup", "q6_search_served",
     // G8: the full serve-with-layout path (subnet + 30-iteration CoSE)
@@ -2122,7 +2099,7 @@ object QueryDefs {
     // round-10 additions: incremental tree maintenance (the dirty-two-
     // chromosome delta vs the ~12.5s full tree — the 100 TB
     // don't-rewrite-the-world path) and the chromosome-partition-pruned
-    // served range (rep 1 builds the partitioned snapshot, the median
+    // served range (the warm-up builds the partitioned snapshot, the median
     // is the pruned serve)
     "s11_tree_refresh", "q5_range_served_part",
     // round-10 additions: NN-Descent kNN-graph construction (the
@@ -2132,20 +2109,20 @@ object QueryDefs {
     // (the maintenance side — rebuild-free ingest)
     "s7_knn_graph", "r2_hybrid_rrf", "s8_graph_search",
     "s9_graph_insert", "r3_mmr_rerank",
-    // the amortized serve shape: rep 1 builds the graph memo, the
+    // the amortized serve shape: the warm-up builds the graph, the
     // median is the warm beam serve (q6_search_served precedent)
     "s8_graph_served",
     // round-10 back half: two-pass PRF retrieval and map-only chunking
     "r4_prf_expand", "p8_chunk_docs",
     // round-11 additions (r10 verdict tasks #4/#6/#7/#5): the r10
     // retrieval lanes the bench never covered; the BM25 cold path vs
-    // its snapshot-served warm twin (rep 1 builds the postings index,
+    // its snapshot-served warm twin (the warm-up builds the postings index,
     // the median is the warm serve); the snapshot build isolated from
     // q6_search_served's serve numbers; the hashed-embedding ANN
     // proof; and the composed chunk→embed→graph-ANN→MMR RAG loop
     "r1_bm25", "r1_bm25_served", "r5_hard_negatives", "t14_embed_knn",
     "q6_snapshot_build", "rag_retrieve",
-    // round-12: the rag warm twin (rep 1 persists chunk/vec/graph
+    // round-12: the rag warm twin (the warm-up persists chunk/vec/graph
     // artifacts, the median is the beam+MMR+join serve — the
     // cache-serving model applied to the flagship composition)
     "rag_served",
@@ -2156,8 +2133,8 @@ object QueryDefs {
     // round-11 back half: the dedup leg's maintenance shape (batch
     // probe against the standing band index — the s9_graph_insert
     // analogue for MinHash-LSH) and its snapshot-served warm twin
-    // (rep 1 builds the standing index, the median is the probe),
-    // plus the graph leg (incremental CC fold-in; rep 1 pays the
+    // (the warm-up builds the standing index, the median is the probe),
+    // plus the graph leg (incremental CC fold-in; the warm-up pays the
     // standing labeling, the fold itself is batch-sized)
     "d12_incremental_dedup", "d12_incremental_served",
     "a6_components_inc", "a6_components_inc_served",
@@ -2178,7 +2155,7 @@ object QueryDefs {
     // per round on the thin graph — the community-detection shape)
     "g10_label_prop",
     // the composed tokenizer→pack pipeline (t16's cost + one window),
-    // and the snapshot-served tokenize (rep 1 pays train+write, the
+    // and the snapshot-served tokenize (the warm-up pays train+write, the
     // median is the one-join warm serve)
     "p11_bpe_pack", "t16_bpe_served",
     // the composed curation pipeline (filter + scrub + retrain + pack)
@@ -2197,7 +2174,7 @@ object QueryDefs {
     "d16_exact_span_rewrite",
     // ...and the span family's maintenance shape (batch probe against
     // the standing gram index — the d12 analogue: cold fold + its
-    // snapshot-served twin, rep 1 of the served lane pays the index
+    // snapshot-served twin, the served lane's warm-up pays the index
     // build+write and the median is the probe-only serve)
     "d16_incremental_spans", "d16_incremental_served")
 

@@ -23,10 +23,10 @@ object Chas {
     * constant shared with the oracle generator (OracleSql replays
     * exactly this many rounds as SQL CTEs) so engine and oracle cannot
     * drift. Cost is linear in rounds (one window sort + one key audit
-    * each). Mixing was MEASURED, not guessed (graft.MixingProbe): each
-    * round proposes ~E/2 swaps, and on the sf0.1 graph (274k edges) the
-    * fraction of original edges still present saturates at its
-    * random-collision equilibrium after round 3 — 6.2% shared after
+    * each). Mixing was MEASURED, not guessed (MixingProbe,
+    * COVERAGE.md): each round proposes ~E/2 swaps, and on the sf0.1
+    * graph (274k edges) the fraction of original edges still present
+    * saturates at its random-collision equilibrium after round 3 — 6.2% shared after
     * round 1, 1.8% after 2, 1.68% after 3, 1.67% flat through round 6 —
     * and the embedded ChAs envelope is already stable to <0.001 (under
     * the replicate spread) from round 2 on. Rounds past 3 buy no
@@ -251,14 +251,10 @@ object Chas {
           .otherwise(lit("inter"))
       } else lit("all")
     // the group tag rides inside the bin key (split back out at the end)
-    val tChain = System.nanoTime()
-    def lap(phase: String): Unit = if (sys.env.contains("SPARK_GRAFT_TIMING"))
-      System.err.println(f"[graft-rand] $phase%-12s at ${(System.nanoTime() - tChain) / 1e9}%7.2fs")
     val base = edges.select(col("src"), col("dst"),
         concat_ws("|", col(groupCol), distBin).as("__bin"))
       .localCheckpoint(eager = true)
     val nBase = base.count() // cheap: checkpointed blocks
-    lap("init")
 
     if (nBase <= localMaxChainRows) {
       // bounded regime: one task per (replica, GROUP) runs that
@@ -299,7 +295,6 @@ object Chas {
         }(out4)
         .toDF("replica", "__bin", "src", "dst")
         .localCheckpoint(eager = true) // consumers branch on the result
-      lap(s"local chain")
       return chained.select(col("replica"),
         split(col("__bin"), "\\|").getItem(0).as(groupCol),
         col("src"), col("dst"))
@@ -422,7 +417,6 @@ object Chas {
       // branch — measured 1.5x slower than checkpointing each round
       cand = next.localCheckpoint(eager = true)
       pairs.unpersist(blocking = false)
-      lap(s"round $r")
       r += 1
     }
     }

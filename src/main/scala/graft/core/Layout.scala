@@ -291,7 +291,12 @@ object Layout {
     * [[coseLocal]] in its own task — parallel across components, no
     * driver state — then packed. Bounded inputs take the one-task
     * whole-layout route ([[localWholeLayout]] — bit-identical
-    * positions, LayoutSpec pins the regime equality). */
+    * positions, LayoutSpec pins the regime equality).
+    *
+    * `nodes` must carry a column named `id` (the node key that
+    * `edges`' `src`/`dst` refer to); other columns are ignored. A frame
+    * keyed under another name must be aliased first, e.g.
+    * `select(col("fragment").as("id"))`. */
   def cose(nodes: DataFrame, edges: DataFrame,
            p: CoseParams = CoseParams(),
            localMaxRows: Long = LocalLayoutMaxRows): DataFrame = {
@@ -583,9 +588,9 @@ object Layout {
   /** Size-routed CoSE: components at or below `bhMinNodes` run the
     * exact one-task regime ([[cose]]); components in (bhMinNodes,
     * bhLocalMaxNodes] run the far-field iteration in one task
-    * ([[coseLocalBarnesHut]] — BhProbe measured it 3-6x faster than
-    * the relational rounds through 131k nodes); only components too
-    * big for a single task take the all-relational far-field regime
+    * ([[coseLocalBarnesHut]] — BhProbe, COVERAGE.md, measured it 3-6x faster
+    * than the relational rounds through 131k nodes); only components too big
+    * for a single task take the all-relational far-field regime
     * ([[coseBarnesHut]]). The two far-field regimes are bit-identical,
     * so routing between them never changes positions. All position
     * sets union under ONE packing pass (pack is offset-invariant:
@@ -693,20 +698,20 @@ object Layout {
   private def fdivSql(a: String, s: String): String =
     s"(($a - ((($a % $s) + $s) % $s)) div $s)"
 
-  /** Measured one-task-vs-BH crossover (graft.BhProbe, local[32],
-    * single ring component, iters=12/levels=3): exact coseLocal wins
-    * below ~2k nodes (3.5 s at 2k vs BH's ~12 s of fixed per-round
-    * stage overhead), the curves cross at ~4k (11.1 s vs 12.3 s), and
-    * exact's quadratic term then runs away — 40.9 s vs 14.5 s at 8k,
-    * 158.9 s vs 28.0 s at 16k (~4x per doubling vs BH's ~2x).
-    * Components above this size should take the far-field regime. */
+  /** Measured one-task-vs-BH crossover (BhProbe, COVERAGE.md; local[32],
+    * single ring component, iters=12/levels=3): exact coseLocal wins below
+    * ~2k nodes (3.5 s at 2k vs BH's ~12 s of fixed per-round stage overhead),
+    * the curves cross at ~4k (11.1 s vs 12.3 s), and exact's quadratic term
+    * then runs away — 40.9 s vs 14.5 s at 8k, 158.9 s vs 28.0 s at 16k (~4x
+    * per doubling vs BH's ~2x). Components above this size should take the
+    * far-field regime. */
   val BhMinNodes = 4000L
 
-  /** Measured one-task-BH vs distributed-BH band (graft.BhProbe, same
-    * harness): the one-task far-field regime beats the relational
-    * rounds 3-6x at every size measured — 3.8s vs 22.5s at 4k, 10.5s
-    * vs 37.2s at 16k, 89s vs 286s at 64k — because it pays the
-    * relational fixed cost (12 rounds x shuffle+plan) zero times, and
+  /** Measured one-task-BH vs distributed-BH band (BhProbe, COVERAGE.md; same
+    * harness): the one-task far-field regime beats the relational rounds 3-6x
+    * at every size measured — 3.8s vs 22.5s at 4k, 10.5s vs 37.2s at 16k, 89s
+    * vs 286s at 64k — because it pays the relational fixed cost (12
+    * rounds x shuffle+plan) zero times, and
     * still 4x at 131k (284s vs 1135s). Its state is 2 longs per node,
     * so the binding constraint is task wall-clock, not memory: at
     * ~131k nodes a single task's far-field pass (near-field pairs +
@@ -903,7 +908,8 @@ object Layout {
     * arithmetic, order-free sums), pinned to the same oracle. The
     * serving-path form: an interactive layout over a big component
     * costs O(n·levels·iters) in ONE task instead of 12 relational
-    * rounds. */
+    * rounds. As for [[cose]], `nodes` must carry a column named `id`;
+    * other columns are ignored. */
   def coseLocalBarnesHut(nodes: DataFrame, edges: DataFrame,
                          p: CoseParams = CoseParams(iters = 12),
                          levels: Int = 3,

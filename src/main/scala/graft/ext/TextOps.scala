@@ -498,11 +498,11 @@ object TextOps {
     // expression inside the lambda BODY is re-evaluated per element —
     // so element_at(toks, i) re-ran the whole regex tokenization once
     // per token (O(tokens²) per doc, ~3 s of the old 3.5 s at 2000
-    // sf0.1 docs; T14Probe). As zip_with ARGUMENTS the slices
-    // evaluate once per row, and the explode(array(tokens)) Generate
-    // below is a projection boundary CollapseProject cannot cross, so
-    // the tokenization itself also runs exactly once per doc instead
-    // of once per slice/size reference.
+    // sf0.1 docs; T14Probe, COVERAGE.md). As zip_with ARGUMENTS the slices
+    // evaluate once per row, and the explode(array(tokens)) Generate below is
+    // a projection boundary CollapseProject cannot cross, so the tokenization
+    // itself also runs exactly once per doc instead of once per
+    // slice/size reference.
     val toksOf = docs
       .select(col(idCol).as("doc_id"),
         explode(array(tokens(lower(col(textCol))))).as("__t"))
@@ -523,7 +523,7 @@ object TextOps {
       .groupBy("doc_id", "__b").agg(sum(col("__s")).as("__v"))
       // both the dense array AND the L2 norm come out of this
       // aggregation, for two reasons that each cost a bench round to
-      // learn (T14Probe):
+      // learn (T14Probe, COVERAGE.md):
       // (1) the norm as a later withColumn invited CollapseProject to
       //     inline its fold lambda into EVERY one of the `dim` output
       //     lambdas — an O(dim²) interpreted blowup (~80x:
