@@ -81,20 +81,23 @@ object QueryDefs {
       // exact variant on the bounded P-P slice of the thin graph
       val t = thin(s, d)
       val pp = GraphOps.subsetPP(t, t.select(col("src").as("id")))
-      // dump the pp-slice witness certificate alongside the scalar:
-      // at sf0.01 the gate judges this lane by the all-pairs closure
-      // (which never reads the fixture); at sf1 — where that closure
-      // is quadratic-OOM — the override oracle re-runs one bounded
-      // BFS per witness here (OracleSql.sf1Overrides)
-      val srcs = GraphOps.diameterCertificate(pp)
-        .collect().map(_.getString(0)).distinct.sorted
+      // the pp-slice witness certificate carries the exact diameter
+      // on every row (0 for an empty slice: no rows) and is dumped
+      // alongside the scalar: at sf0.01 the gate judges this lane by
+      // the all-pairs closure (which never reads the fixture); at sf1
+      // — where that closure is quadratic-OOM — the override oracle
+      // re-runs one bounded BFS per witness here
+      // (OracleSql.sf1Overrides)
+      val cert = GraphOps.diameterCertificate(pp).collect()
+      val srcs = cert.map(_.getString(0)).distinct.sorted
       val dir = java.nio.file.Paths.get(ReaderHarness.fixtureRoot,
         s"a7_exact_cert_${ReaderHarness.sfToken(d)}")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.writeString(dir.resolve("sources.csv"),
         "source\n" + (if (srcs.isEmpty) ""
                       else srcs.mkString("\n") + "\n"))
-      s.range(1).select(lit(GraphOps.diameterExact(pp)).as("diameter"))
+      s.range(1).select(lit(cert.headOption.fold(0L)(_.getLong(2)))
+        .as("diameter"))
     }),
     // the CERTIFICATE form of a7: per component the root pivot + the
     // diameter witness with their exact eccentricities. The witness

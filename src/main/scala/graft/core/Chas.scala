@@ -304,10 +304,9 @@ object Chas {
       .withColumn("replica", explode(sequence(lit(0), lit(nReplicates - 1))))
       .localCheckpoint(eager = true)
 
-    // every round re-shuffles the same working set — size the shuffle
-    // width for it once (no-op at scale, cuts per-task fixed overhead
-    // when the set is small; see GraphOps.withShuffleWidthFor)
-    GraphOps.withShuffleWidthFor(cand, nBase * nReplicates) {
+    // distributed regime: windowed rounds at the session's own shuffle
+    // width — the chain writes no session conf, so concurrent callers
+    // can share the session
     var r = 0
     while (r < rounds) {
       // 1. seeded random pairing within (replica, bin): row_number +
@@ -419,7 +418,6 @@ object Chas {
       pairs.unpersist(blocking = false)
       r += 1
     }
-    }
     cand.select(col("replica"),
       split(col("__bin"), "\\|").getItem(0).as(groupCol),
       col("src"), col("dst"))
@@ -488,28 +486,6 @@ object Chas {
       .join(mdeg, Seq("subnet", "feature"), "outer")
       .join(env, Seq("subnet", "feature"), "outer")
       .select(col("subnet"), col("feature"),
-        graft.ext.Num.roundLike(col("abundance"), 2).as("abundance"),
-        graft.ext.Num.roundLike(col("chas"), 3).as("chas"),
-        format_string("%.3f,%.3f", col("chas_min"), col("chas_max"))
-          .as("random_chas_interval"),
-        graft.ext.Num.roundLike(col("mean_degree"), 2).as("mean_degree"))
-  }
-
-  /** features_metadata assembly: {Abundance, ChAs, RandomChAs envelope,
-    * MeanDegree} per feature for one subnet. The reference materializes
-    * this three times (net/pp/po, network_generator.R:255-266); callers
-    * union three tagged invocations — or run them in one pass by tagging
-    * edges with a subnet column upstream. */
-  def featuresMetadata(edges: DataFrame, features: DataFrame,
-                       degrees: DataFrame, nReplicates: Int,
-                       seed: Long): DataFrame = {
-    chas(edges, features).as("c")
-      .join(abundance(features).as("a"), Seq("feature"), "outer")
-      .join(meanDegreeOfPositives(features, degrees).as("m"),
-        Seq("feature"), "outer")
-      .join(randomChasEnvelope(edges, features, nReplicates, seed),
-        Seq("feature"), "outer")
-      .select(col("feature"),
         graft.ext.Num.roundLike(col("abundance"), 2).as("abundance"),
         graft.ext.Num.roundLike(col("chas"), 3).as("chas"),
         format_string("%.3f,%.3f", col("chas_min"), col("chas_max"))

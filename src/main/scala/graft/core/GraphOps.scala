@@ -18,63 +18,14 @@ import org.apache.spark.storage.StorageLevel
   * cutoff they are driver-loops of DataFrame self-joins with
   * localCheckpoint every iteration to cut lineage — the standard Spark
   * shape for fixpoint computations (SURVEY §7.4.3).
+  *
+  * The dispatch picks a regime and nothing else: no operator here
+  * writes session conf. Every stage runs at the session's own shuffle
+  * width (AQE, on by Spark's default, coalesces small reduce
+  * partitions from measured bytes), so concurrent callers on one
+  * session never race on shared settings.
   */
 object GraphOps {
-
-  /** Run `f` with `spark.sql.shuffle.partitions` sized for `rows`
-    * (target ~50k rows/partition, clamped to the session width): an
-    * iterative chain re-shuffles its working set every round, and a
-    * session width tuned for the big scans over-partitions a small
-    * frame into per-task fixed overhead (measured 1.5-2x of CC/BFS
-    * wall time at sf0.1). At scale rows/50k exceeds the session width
-    * and this is a no-op; results are width-independent (all chain
-    * operators are order-insensitive or totally ordered). Restores the
-    * session width on exit — the chains' in-loop actions all run
-    * inside the scope; caller-side actions on the (checkpointed)
-    * result run at session width. */
-  /** Session-conf marker: "true" disables the per-chain shuffle-width
-    * narrowing below (set by concurrent regions that pinned a width for
-    * all lanes — a per-chain set/restore would race across threads). */
-  private[graft] val WidthPinKey = "spark.graft.shuffleWidth.pinned"
-
-  private[core] def withShuffleWidthFor[T](df: DataFrame, rows: Long,
-                                           staticPlan: Boolean = false)
-                                          (f: => T): T = {
-    val conf = df.sparkSession.conf
-    // concurrent regions (Pipeline.writeDatasetTree fans independent
-    // metadata passes onto threads) PIN one width for the whole region:
-    // the per-chain narrowing here would race on the session conf, so
-    // under the pin it is a declared no-op
-    if (conf.getOption(WidthPinKey).contains("true")) return f
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    // session widths can be non-numeric ("auto" on some platforms) —
-    // then narrowing is a no-op rather than a crash. NOTE: conf.set
-    // mutates SESSION-global state for the duration of f; callers are
-    // single-threaded per session (Verify/Bench/tree write). Concurrent
-    // queries on a shared session must pin (see WidthPinKey) or clone
-    // the session (session.newSession() isolates SQLConf) before
-    // entering an iterative chain.
-    val prevWidth = prev.toLongOption
-    if (prevWidth.isEmpty) return f
-    // 50k rows/partition sits on the measured flat optimum for the
-    // randomize chain at sf0.1 (25k equal, 100k+ 35% slower)
-    val width = math.max(1L, math.min(prevWidth.get, rows / 50000L + 1))
-    // staticPlan: additionally skip AQE's per-stage re-planning — but
-    // ONLY in the narrowed regime (width below the session's), where
-    // the whole working set is a handful of partitions and a skewed
-    // key is bounded by the (small) data itself. At scale the clamp
-    // leaves AQE on: skew-join splitting on hub nodes is real
-    // protection for the frontier/label joins there. Measured on the
-    // sf0.1 thin graph: CC 3.5 → 2.3 s, diameter 8.1 → 6.7 s.
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
-    val dropAqe = staticPlan && width < prevWidth.get && prevAqe == "true"
-    conf.set("spark.sql.shuffle.partitions", width.toString)
-    if (dropAqe) conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally {
-      conf.set("spark.sql.shuffle.partitions", prev)
-      if (dropAqe) conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
 
   /** Both directions of an undirected edge list (src,dst) ∪ (dst,src).
     * Emitted via a per-row explode, NOT a self-union: a union of two
@@ -121,28 +72,50 @@ object GraphOps {
     * and exact — but a near-regular graph whose bounds close slowly
     * (the degenerate case for sequential iFUB: a large fraction of
     * nodes BFS'd on one core) now costs descent/cores. Total sources
-    * are bounded by V, so worst case is the textbook exact-diameter
-    * O(V·E) — parallelized — and typical graphs certify in a few
-    * batches. */
-  private[graft] def diameterLocalSym(sym: DataFrame): Long = {
+    * are bounded by V, so worst case is the textbook O(V·E) exact-
+    * diameter — parallelized — and typical graphs certify in a few
+    * batches.
+    *
+    * `certify` also returns the A7 CERTIFICATE: per component (of ≥2
+    * nodes) the root pivot and the witness source whose eccentricity
+    * equals the component diameter, each with its exact eccentricity,
+    * sorted. The descent tracks root and witness indices either way
+    * (int arrays); only the certificate ships the id strings out of
+    * the build task. Witnesses do not depend on the input's row order:
+    * the pivot is the max-degree node with ties to the smaller id, and
+    * each batch folds in id order with strict improvement only, so the
+    * witness is the first (depth desc, id asc) node reaching the
+    * component's final bound — both ids compared in Spark's binary
+    * string order. Returns (diameter, certificate rows (source, ecc)). */
+  private[graft] def diameterLocalSym(sym: DataFrame, certify: Boolean = false)
+      : (Long, Seq[(String, Long)]) = {
     val spark = sym.sparkSession
+    import spark.implicits._
     // the layout travels as bounded chunk rows, never one giant
     // serialized object (LocalGraph.chunkLayout scaladoc)
-    import spark.implicits._
     val rows = localPairs(sym)
-      .mapPartitions(it => LocalGraph.chunkLayout(
-        LocalGraph.diamLayout(LocalGraph.build(it))))
+      .mapPartitions { it =>
+        val g = LocalGraph.build(it)
+        LocalGraph.chunkLayout(LocalGraph.diamLayout(g))
+          .map { case (n, i, a) => (n, i, a, Array.empty[String]) } ++
+          (if (!certify) Iterator.empty
+           else g.ids.grouped(1 << 20).zipWithIndex
+             .map { case (s, i) => ("ids", i, Array.empty[Int], s) })
+      }
       .collect()
     // a zero-partition empty input yields NO rows from coalesce(1) —
     // an empty edge list has diameter 0 either way
-    if (rows.isEmpty) return 0L
-    val layout = LocalGraph.assembleLayout(rows)
-    if (layout.n == 0) return 0L
+    if (rows.isEmpty) return (0L, Nil)
+    val layout = LocalGraph.assembleLayout(
+      rows.collect { case (n, i, a, _) if n != "ids" => (n, i, a) })
+    if (layout.n == 0) return (0L, Nil)
+    val ids = rows.filter(_._1 == "ids").sortBy(_._2).flatMap(_._4)
     val sc = spark.sparkContext
     val bc = sc.broadcast((layout.off, layout.adj))
     try {
-      val lb = layout.rootEcc.map(_.toLong)
       val comp = layout.comp
+      val lb = layout.rootEcc.map(_.toLong)
+      val best = layout.root.clone() // witness source per component
       var i = layout.maxDepth
       while (i >= 1) {
         val batch = new scala.collection.mutable.ArrayBuffer[Int]()
@@ -167,135 +140,49 @@ object GraphOps {
                 (s, LocalGraph.eccInto(off, adj, s, dist, stamp, queue, version))
               }
             }.collect()
-          for ((s, e) <- eccs) {
-            val c = comp(s)
-            if (e > lb(c)) lb(c) = e.toLong
-          }
-        }
-        i -= 1
-      }
-      lb.max
-    } finally bc.destroy()
-  }
-
-  /** A7 CERTIFICATE: the independently-checkable witness set behind
-    * the exact diameter. Per component (of ≥2 nodes): the max-degree
-    * root pivot and the witness source whose eccentricity equals the
-    * component diameter, each with its exact eccentricity — so an
-    * external verifier can re-run ONE bounded BFS per listed source
-    * (2 per component, never O(V)) and confirm every number plus
-    * `diameter = max(ecc)`, at ANY scale where a per-source BFS is
-    * tractable — the all-pairs closure an exact-diameter oracle
-    * otherwise needs is quadratic and dies at sf1
-    * (COVERAGE.md a7 exclusion; this certificate closes that gap).
-    * The descent itself is [[diameterLocalSym]]'s parallel iFUB with
-    * per-component argmax tracking (deterministic: batches fold in
-    * ascending source order, strict improvement only), so the
-    * certificate costs nothing beyond the exact computation.
-    * Covers the one-task and broadcast-CSR regimes (≤
-    * [[BroadcastCsrMaxEdges]] sym rows).
-    * Returns (diameter, rows of (source id, ecc)). */
-  private[graft] def diameterCertLocalSym(sym: DataFrame)
-      : (Long, Seq[(String, Long)]) = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    // ONE build task emits the int layout chunks AND the id-string
-    // chunks (the certificate needs vertex names; the plain descent
-    // deliberately strips them)
-    val rows = localPairs(sym)
-      .mapPartitions { it =>
-        val g = LocalGraph.build(it)
-        val l = LocalGraph.diamLayout(g)
-        LocalGraph.chunkLayout(l)
-          .map { case (n, i, a) => (n, i, a, Array.empty[String]) } ++
-          g.ids.grouped(1 << 20).zipWithIndex
-            .map { case (s, i) => ("ids", i, Array.empty[Int], s) }
-      }
-      .collect()
-    if (rows.isEmpty) return (0L, Nil)
-    val layout = LocalGraph.assembleLayout(
-      rows.collect { case (n, i, a, _) if n != "ids" => (n, i, a) })
-    if (layout.n == 0) return (0L, Nil)
-    val ids = rows.iterator.filter(_._1 == "ids").toArray.sortBy(_._2)
-      .flatMap(_._4)
-    val sc = spark.sparkContext
-    val bc = sc.broadcast((layout.off, layout.adj))
-    try {
-      val comp = layout.comp
-      val lb = layout.rootEcc.map(_.toLong)
-      // per-component witnesses, seeded with the root pivots (same
-      // selection as diamLayout: first max-degree node in index order)
-      val root = Array.fill(layout.nComp)(-1)
-      var v = 0
-      while (v < layout.n) {
-        val c = comp(v)
-        def deg(u: Int) = layout.off(u + 1) - layout.off(u)
-        if (root(c) < 0 || deg(v) > deg(root(c))) root(c) = v
-        v += 1
-      }
-      val best = root.clone() // witness source per component
-      var i = layout.maxDepth
-      while (i >= 1) {
-        val batch = new scala.collection.mutable.ArrayBuffer[Int]()
-        v = 0
-        while (v < layout.n) {
-          if (layout.depth(v) == i && lb(comp(v)) < 2L * i) batch += v
-          v += 1
-        }
-        if (batch.nonEmpty) {
-          val slices = math.max(1, math.min(batch.length,
-            sc.defaultParallelism * 4))
-          val eccs = sc.parallelize(batch.toSeq, slices)
-            .mapPartitions { sources =>
-              val (off, adj) = bc.value
-              val n = off.length - 1
-              val dist = new Array[Int](n)
-              val stamp = new Array[Int](n)
-              val queue = new Array[Int](n)
-              var version = 0
-              sources.map { s =>
-                version += 1
-                (s, LocalGraph.eccInto(off, adj, s, dist, stamp, queue,
-                  version))
-              }
-            }.collect()
-          for ((s, e) <- eccs.sortBy(_._1)) { // deterministic fold order
+          // the bound is a max (any order); the witness needs id order
+          val folded = if (!certify) eccs
+            else eccs.sortWith((a, b) => LocalChain.bcmp(ids(a._1), ids(b._1)) < 0)
+          for ((s, e) <- folded) {
             val c = comp(s)
             if (e > lb(c)) { lb(c) = e.toLong; best(c) = s }
           }
         }
         i -= 1
       }
-      val cert = (0 until layout.nComp).iterator
+      val cert = if (!certify) Nil else (0 until layout.nComp).iterator
         .filter(c => lb(c) > 0L) // isolated nodes witness nothing
         .flatMap(c => Seq(
-          (ids(root(c)), layout.rootEcc(c).toLong),
+          (ids(layout.root(c)), layout.rootEcc(c).toLong),
           (ids(best(c)), lb(c))))
         .toSeq.distinct.sorted
-      ((0L +: lb.toSeq).max, cert)
+      (lb.max, cert)
     } finally bc.destroy()
   }
 
   /** A7 certificate as a DataFrame(source, ecc, diameter): the
-    * serve-shape of [[diameterCertLocalSym]] — one row per witness,
-    * every row carrying the certified diameter (= max ecc over the
-    * witnesses, which iFUB guarantees equals the true diameter). */
+    * [[diameterLocalSym]] certificate, one row per witness, every row
+    * carrying the certified diameter (= max ecc over the witnesses,
+    * which iFUB guarantees equals the true diameter). An external
+    * verifier re-runs ONE bounded BFS per listed source (2 per
+    * component, never O(V)) and confirms every number plus
+    * `diameter = max(ecc)`, at ANY scale where a per-source BFS is
+    * tractable — the all-pairs closure an exact-diameter oracle
+    * otherwise needs is quadratic and dies at sf1 (COVERAGE.md a7
+    * exclusion; this certificate closes that gap). Covers the one-task
+    * and broadcast-CSR regimes (≤ [[BroadcastCsrMaxEdges]] sym rows). */
   def diameterCertificate(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = sym.count()
+      require(n <= BroadcastCsrMaxEdges,
+        s"diameterCertificate covers the CSR regimes (<= " +
+          s"$BroadcastCsrMaxEdges sym rows); got $n")
       val (diam, cert) =
         if (n == 0) (0L, Seq.empty[(String, Long)])
-        else {
-          require(n <= BroadcastCsrMaxEdges,
-            s"diameterCertificate covers the CSR regimes (<= " +
-              s"$BroadcastCsrMaxEdges sym rows); got $n")
-          withShuffleWidthFor(sym, n, staticPlan = true) {
-            diameterCertLocalSym(sym)
-          }
-        }
+        else diameterLocalSym(sym, certify = true)
       cert.toDF("source", "ecc").withColumn("diameter", lit(diam))
     } finally sym.unpersist()
   }
@@ -395,7 +282,6 @@ object GraphOps {
         .toDF("id", "comp")
         .localCheckpoint(eager = true)
     }
-    withShuffleWidthFor(edgeList, nRows, staticPlan = true) {
     var cc = edgeList
       .groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), first(col("src"))).as("comp"))
@@ -436,7 +322,6 @@ object GraphOps {
       iter += 1
     }
     cc
-    }
   }
 
   /** Component count + largest-component share "NN.NN%" (2 dp) —
@@ -560,40 +445,6 @@ object GraphOps {
     (dist, far, nVisited)
   }
 
-  /** A7 diameter: iterated double-sweep — BFS from a max-degree pivot,
-    * then repeatedly re-sweep from the farthest node found. Exact on
-    * trees and, in practice, on the power-law-ish graphs this engine
-    * targets (the double-sweep lower bound is known tight on real-world
-    * graphs); cost O(sweeps · E) instead of the all-pairs O(V · E) —
-    * the version that survives a 100k-node component.
-    * Reference: diameter(net), network_generator_lib.R:418. */
-  def diameter(edges: DataFrame, sweeps: Int = 4): Long = {
-    val sym = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nRows = sym.count()
-    if (nRows == 0) { sym.unpersist(); return 0L }
-    withShuffleWidthFor(sym, nRows, staticPlan = true) {
-    // degree from the cached symmetrized frame (one row per direction)
-    // — not degrees(edges), which would re-run the input lineage
-    val start = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("degree"))
-      .orderBy(col("degree").desc, col("id"))
-      .limit(1).collect()(0).getString(0)
-    var best = 0L
-    var cur = start
-    val seen = scala.collection.mutable.Set[String]()
-    var i = 0
-    while (i < sweeps && !seen.contains(cur)) {
-      seen += cur
-      val (ecc, far, _) = bfsEccentricity(sym, cur)
-      if (ecc > best) best = ecc
-      cur = far
-      i += 1
-    }
-    sym.unpersist()
-    best
-    }
-  }
-
   /** A7 CERTIFIED diameter, 1-row DF (diameter, exact). Cheap path:
     * double-sweep lower bound + the 2·ecc(v) upper bound (triangle
     * inequality) over the swept pivots — when the graph is one
@@ -634,36 +485,33 @@ object GraphOps {
       .select(lit(d).as("diameter"), lit(exact).as("exact"))
     if (nRows == 0) { return res(0L, exact = true) }
     if (nRows <= localMaxEdges) {
-      return res(diameterLocalSym(sym), exact = true)
+      return res(diameterLocalSym(sym)._1, exact = true)
     }
-    // every phase shuffles O(E)-or-smaller working sets — narrow once
-    withShuffleWidthFor(sym, nRows, staticPlan = true) {
-      val nNodes = sym.select("src").distinct().count()
-      val start = sym.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("degree"))
-        .orderBy(col("degree").desc, col("id"))
-        .limit(1).collect()(0).getString(0)
-      var eccs = List.empty[Long]
-      var covered = 0L
-      var cur = start
-      val seen = scala.collection.mutable.Set[String]()
-      var i = 0
-      var closed = false
-      while (i < sweeps && !seen.contains(cur) && !closed) {
-        seen += cur
-        val (ecc, far, nVis) = bfsEccentricity(sym, cur)
-        eccs ::= ecc
-        covered = nVis
-        cur = far
-        i += 1
-        // bounds already closed -> further sweeps cannot help
-        closed = covered == nNodes && eccs.max == 2 * eccs.min
-      }
-      val (lb, ub) = (eccs.max, 2 * eccs.min)
-      if (covered == nNodes && lb == ub) res(lb, exact = true)
-      else res(diameterIfubSym(sym, nRows, lb0 = lb,
-        broadcastMaxEdges = broadcastMaxEdges), exact = true)
+    val nNodes = sym.select("src").distinct().count()
+    val start = sym.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("degree"))
+      .orderBy(col("degree").desc, col("id"))
+      .limit(1).collect()(0).getString(0)
+    var eccs = List.empty[Long]
+    var covered = 0L
+    var cur = start
+    val seen = scala.collection.mutable.Set[String]()
+    var i = 0
+    var closed = false
+    while (i < sweeps && !seen.contains(cur) && !closed) {
+      seen += cur
+      val (ecc, far, nVis) = bfsEccentricity(sym, cur)
+      eccs ::= ecc
+      covered = nVis
+      cur = far
+      i += 1
+      // bounds already closed -> further sweeps cannot help
+      closed = covered == nNodes && eccs.max == 2 * eccs.min
     }
+    val (lb, ub) = (eccs.max, 2 * eccs.min)
+    if (covered == nNodes && lb == ub) res(lb, exact = true)
+    else res(diameterIfubSym(sym, nRows, lb0 = lb,
+      broadcastMaxEdges = broadcastMaxEdges), exact = true)
   }
 
   /** Exact diameter = max FINITE pairwise distance. Bounded graphs run
@@ -678,10 +526,8 @@ object GraphOps {
     try {
       val n = sym.count()
       if (n == 0) 0L
-      else if (n <= localMaxEdges) diameterLocalSym(sym)
-      else withShuffleWidthFor(sym, n, staticPlan = true) {
-        diameterIfubSym(sym, n, broadcastMaxEdges = broadcastMaxEdges)
-      }
+      else if (n <= localMaxEdges) diameterLocalSym(sym)._1
+      else diameterIfubSym(sym, n, broadcastMaxEdges = broadcastMaxEdges)
     } finally sym.unpersist()
   }
 
@@ -728,14 +574,13 @@ object GraphOps {
     * Worst case (near-regular graphs whose bounds close slowly) is the
     * textbook O(V·E) — batched wide rather than refused. `lb0` seeds
     * the bound with any already-witnessed eccentricity (the caller's
-    * double sweeps). Caller owns sym's persistence and shuffle-width
-    * scope. */
+    * double sweeps). Caller owns sym's persistence. */
   private[graft] def diameterIfubSym(sym: DataFrame, nRows: Long,
                                      lb0: Long = 0L,
                                      batchSize: Int = 4096,
                                      broadcastMaxEdges: Long =
                                        BroadcastCsrMaxEdges): Long = {
-    if (nRows <= broadcastMaxEdges) return diameterLocalSym(sym)
+    if (nRows <= broadcastMaxEdges) return diameterLocalSym(sym)._1
     val spark = sym.sparkSession
     // per-component max-degree root (ties: min id — deterministic)
     val cc = connectedComponentsSym(sym, nRows)

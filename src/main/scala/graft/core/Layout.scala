@@ -633,32 +633,6 @@ object Layout {
   // per-document layouts (the S11 tree enrichment)
   // ---------------------------------------------------------------------
 
-  /** Whole-document grid positions for a CORPUS of documents in one
-    * plan: per document, nodes in id order fill a ceil(sqrt(n))-wide
-    * row-major grid at `spacing` pitch (cytoscape.js 'grid' over the
-    * full document). One window pass partitioned by document — the
-    * layout a million-document tree can afford; positions are exact
-    * LONG multiples of the spacing (never exponent-formatted in JSON,
-    * the reference's sed-fixed failure mode). Output:
-    * DF(doc, id, x, y). */
-  def gridPerDoc(members: DataFrame, spacing: Long = 100L): DataFrame = {
-    val doc = members.columns(0)
-    val id = members.columns(1)
-    val w = Window.partitionBy(doc).orderBy(id)
-    val n = Window.partitionBy(doc)
-    members
-      .withColumn("__j", (row_number().over(w) - lit(1)).cast("long"))
-      .withColumn("__c",
-        ceil(sqrt(count(lit(1)).over(n).cast("double"))).cast("long"))
-      .select(col(doc), col(id),
-        // origin-offset by one pitch: a node at exactly (0,0) is the
-        // reference checker's "not generated positions" sentinel
-        // (chromosomes_positions_checker.sh:12-14)
-        ((pmod(col("__j"), col("__c")) + lit(1L)) * lit(spacing)).as("x"),
-        (((col("__j") - pmod(col("__j"), col("__c"))) / col("__c") +
-          lit(1L)) * lit(spacing)).cast("long").as("y"))
-  }
-
   /** Per-document CoSE positions for a corpus of documents as ONE
     * layout call: documents disjoint-union under doc-prefixed ids
     * ("doc|id" — fragments and chromosome names never contain '|'),
@@ -667,8 +641,8 @@ object Layout {
     * force-directed and non-degenerate. Size-routed ([[coseRouted]]):
     * components above the measured [[BhMinNodes]] crossover take the
     * far-field regime instead of the O(n²) exact one, so one oversized
-    * document can't blow the tree write; the grid form remains the
-    * any-scale default. Output: DF(doc, id, x, y). */
+    * document can't blow the tree write; the inline grid
+    * (CytoscapeJson.InlineGridPositions) remains the any-scale default. Output: DF(doc, id, x, y). */
   def cosePerDoc(members: DataFrame, edges: DataFrame,
                  p: CoseParams = CoseParams()): DataFrame = {
     val dCol = members.columns(0)

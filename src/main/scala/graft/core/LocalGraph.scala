@@ -225,14 +225,15 @@ private[graft] object LocalGraph {
 
   /** Everything the PARALLEL iFUB descent needs, stripped to ints (no
     * node strings): the CSR arrays, each node's component and depth
-    * from its component's max-degree root, and the per-component root
+    * from its component's root, the per-component root index and root
     * eccentricity (the descent's starting lower bound). Built in ONE
     * task, collected to the driver (≤ a few MB per million nodes),
     * broadcast back for the batched fringe BFS jobs
     * (GraphOps.diameterLocalSym). */
   final case class DiamLayout(off: Array[Int], adj: Array[Int],
                               comp: Array[Int], depth: Array[Int],
-                              nComp: Int, rootEcc: Array[Int]) {
+                              nComp: Int, root: Array[Int],
+                              rootEcc: Array[Int]) {
     def n: Int = comp.length
     def maxDepth: Int = if (rootEcc.isEmpty) 0 else rootEcc.max
   }
@@ -242,12 +243,15 @@ private[graft] object LocalGraph {
     val nComp = if (comp.isEmpty) 0 else comp.max + 1
     val depth = new Array[Int](g.n)
     val rootEcc = new Array[Int](nComp)
-    // max-degree root per component
+    // max-degree root per component, degree ties to the smaller id in
+    // UTF8String binary order: the root (and every depth below it)
+    // does not depend on the order the input rows arrived in
     val root = Array.fill(nComp)(-1)
     var v = 0
     while (v < g.n) {
-      val c = comp(v)
-      if (root(c) < 0 || g.degree(v) > g.degree(root(c))) root(c) = v
+      val c = comp(v); val r = root(c)
+      if (r < 0 || g.degree(v) > g.degree(r) || (g.degree(v) == g.degree(r)
+          && LocalChain.bcmp(g.ids(v), g.ids(r)) < 0)) root(c) = v
       v += 1
     }
     val dist = new Array[Int](g.n)
@@ -266,7 +270,7 @@ private[graft] object LocalGraph {
       }
       c += 1
     }
-    DiamLayout(g.off, g.adj, comp, depth, nComp, rootEcc)
+    DiamLayout(g.off, g.adj, comp, depth, nComp, root, rootEcc)
   }
 
   /** DiamLayout ⇄ bounded (field, chunk, slice) rows. At the top of
@@ -287,7 +291,7 @@ private[graft] object LocalGraph {
       else a.grouped(chunk).zipWithIndex.map { case (s, i) => (name, i, s) }
     chunks("off", l.off) ++ chunks("adj", l.adj) ++
       chunks("comp", l.comp) ++ chunks("depth", l.depth) ++
-      chunks("rootEcc", l.rootEcc) ++
+      chunks("root", l.root) ++ chunks("rootEcc", l.rootEcc) ++
       Iterator(("nComp", 0, Array(l.nComp)))
   }
 
@@ -298,7 +302,7 @@ private[graft] object LocalGraph {
       else Array.concat(parts.map(_._3).toIndexedSeq: _*)
     }
     DiamLayout(arr("off"), arr("adj"), arr("comp"), arr("depth"),
-      arr("nComp")(0), arr("rootEcc"))
+      arr("nComp")(0), arr("root"), arr("rootEcc"))
   }
 
   /** Array BFS from `source`; version-stamped state owned by the

@@ -181,7 +181,6 @@ object Pipeline {
     import scala.concurrent.duration.Duration
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/chromosomes"))
-    val spark = ds.edges.sparkSession
     // the tree reads nodes/edges many times over (three iterative
     // metadata passes, the randomization envelope, one document per
     // chromosome): pin both once so every pass is a cache scan, not a
@@ -209,41 +208,16 @@ object Pipeline {
     // same shape overlaps scheduler round-trips.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val conf = spark.conf
-    val prevWidth = conf.get("spark.sql.shuffle.partitions")
-    var pinned = false
     try {
-      // materialize the EDGE cache once before the fan-out (its row
-      // count sizes the pinned width; it also underlies sym and most
-      // lanes) and pin one shuffle width for the whole region, sized
-      // for the largest lane working set — the randomization chain at
-      // 2 subnet tags × nReplicates × |E|. Per-chain narrowing
-      // (GraphOps.withShuffleWidthFor) is a declared no-op under the
-      // pin: lanes would otherwise race set/restore on the session
-      // conf. The nodes and sym caches materialize INSIDE the lanes
-      // that first touch them (concurrent first readers of one cached
-      // partition block on the computing thread, they don't recompute).
+      // materialize the EDGE cache once before the fan-out (it
+      // underlies sym and most lanes, and its row count routes the
+      // document writer). Every lane runs at the session's own shuffle
+      // width — no lane writes session conf, so the concurrent lanes
+      // share the session without racing on it. The sym cache
+      // materializes INSIDE the lanes that first touch it (concurrent
+      // first readers of one cached partition block on the computing
+      // thread, they don't recompute).
       val nEdges = edgesC.count()
-      prevWidth.toLongOption.foreach { pw =>
-        // floor at the session's core parallelism: narrowing BELOW the
-        // core count starves the whole concurrent-lane region (every
-        // shuffle stage of every lane gets `width` tasks — measured
-        // 51.5 s vs 37.0 s end-to-end at sf0.1 when the row-based
-        // formula pinned 4 on a 32-core session). The row-based term
-        // still bounds tiny-partition overhead when the session width
-        // is far above the data (e.g. 200 default on a small dataset).
-        val cores = spark.sparkContext.defaultParallelism.toLong
-        val width = math.max(math.min(pw, cores),
-          math.min(pw, 2L * nReplicates * nEdges / 50000L + 1))
-        if (width < pw)
-          conf.set("spark.sql.shuffle.partitions", width.toString)
-        // the pin engages even when no narrowing applies: without it
-        // the lanes would each run their own set/restore and race —
-        // an interleaved restore can leave the session narrowed (or
-        // AQE off) AFTER the tree write
-        conf.set(GraphOps.WidthPinKey, "true")
-        pinned = true
-      }
       // materialize the NODES cache before the fan-out too: four lanes
       // (graphMetadata, suggestions, chromosomes, documents) block on
       // it, and under the concurrent region the annotated-vertex build
@@ -319,10 +293,6 @@ object Pipeline {
       Await.result(fDocs, Duration.Inf)
     } finally {
       pool.shutdown()
-      if (pinned) {
-        conf.set("spark.sql.shuffle.partitions", prevWidth)
-        conf.unset(GraphOps.WidthPinKey)
-      }
       sym.unpersist(blocking = false)
       edgesC.unpersist(blocking = false)
       nodesC.unpersist(blocking = false)

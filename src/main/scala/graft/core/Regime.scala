@@ -19,6 +19,10 @@ import org.apache.spark.sql.DataFrame
   *   - t16       TextOps.bpeCore    `localMaxWords` (distinct words)
   *   - s11       Pipeline           `DocStreamMaxEdges`
   *
+  * Routing picks a regime and nothing else: no branch writes session
+  * conf (shuffle width, AQE), so every regime runs at the session's
+  * own settings and concurrent callers may share one session.
+  *
   * This object hosts the shared stat for the remaining pairs — the
   * d16 span family (window vs groupBy+join-back) and r3 MMR (one-task
   * pool fold vs relational rounds) — where the right cheap stat is

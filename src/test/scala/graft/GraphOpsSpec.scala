@@ -74,12 +74,21 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("A7 diameter: exact on a path (double-sweep tight on trees)") {
-    assert(GraphOps.diameter(pathGraph) == 4L)
+    // two distributed sweeps reach the path's diameter; the certified
+    // value is exact
+    val r = GraphOps.diameterCertified(pathGraph, sweeps = 2,
+      localMaxEdges = 0L).collect()(0)
+    assert(r.getLong(0) == 4L && r.getBoolean(1))
+    assert(GraphOps.diameterExact(pathGraph) == 4L)
   }
 
   test("A7 diameter: triangle = 1, star = 2") {
-    assert(GraphOps.diameter(edgesOf(Seq("a" -> "b", "b" -> "c", "a" -> "c"))) == 1L)
-    assert(GraphOps.diameter(edgesOf(Seq("c" -> "a", "c" -> "b", "c" -> "d"))) == 2L)
+    val tri = edgesOf(Seq("a" -> "b", "b" -> "c", "a" -> "c"))
+    val star = edgesOf(Seq("c" -> "a", "c" -> "b", "c" -> "d"))
+    assert(GraphOps.diameterExact(tri) == 1L)
+    assert(GraphOps.diameterExact(tri, localMaxEdges = 0L) == 1L)
+    assert(GraphOps.diameterExact(star) == 2L)
+    assert(GraphOps.diameterExact(star, localMaxEdges = 0L) == 2L)
   }
 
   test("A8 transitivity: triangle + pendant = 3*1/5") {
@@ -229,11 +238,38 @@ class GraphOpsSpec extends SparkSpec {
       edgesOf(Seq.empty)).collect().isEmpty)
   }
 
+  test("A7 certificate witnesses do not depend on row order or partitioning") {
+    // a-b-c-d-e: b, c and d tie at degree 2, so the root pivot is a
+    // tie the layout must break by id, not by row arrival; in the star
+    // every leaf reaches ecc 2 in one fringe batch, so the witness is
+    // a tie the fold must break by id
+    val pairs = Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e",
+      "x2" -> "x1", "x1" -> "x3", "x3" -> "x4",
+      "s" -> "l3", "s" -> "l1", "s" -> "l2")
+    def rows(e: org.apache.spark.sql.DataFrame) =
+      GraphOps.diameterCertificate(e).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val base = rows(edgesOf(pairs))
+    // per component: the smallest-id max-degree root with its ecc, and
+    // the smallest-id source of the first batch reaching the diameter
+    assert(base == Seq(("b", 3L, 4L), ("e", 4L, 4L), ("l1", 2L, 4L),
+      ("s", 1L, 4L), ("x1", 2L, 4L), ("x4", 3L, 4L)))
+    assert(rows(edgesOf(pairs.reverse)) == base, "reversed rows")
+    for (width <- Seq(1, 7)) {
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", width.toString)
+      import s2.implicits._
+      val e = pairs.toDF("src", "dst").repartition(col("src"))
+      assert(rows(e) == base, s"repartition(src) at width $width")
+    }
+  }
+
   test("A7 local regime (iFUB) is exact and certified on every fixture shape") {
     def cert(e: org.apache.spark.sql.DataFrame): (Long, Boolean) = {
       val r = GraphOps.diameterCertified(e).collect()(0)
       (r.getLong(0), r.getBoolean(1))
     }
+    assert(cert(edgesOf(Seq("a" -> "b", "b" -> "c", "a" -> "c"))) == (1L, true))
     assert(cert(edgesOf(Seq("c" -> "a", "c" -> "b", "c" -> "d"))) == (2L, true))
     assert(cert(edgesOf(Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"))) == (4L, true))
     assert(cert(edgesOf(Seq("a" -> "b", "b" -> "c", "c" -> "d"))) == (3L, true))
@@ -298,6 +334,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(rt.off.sameElements(l.off) && rt.adj.sameElements(l.adj))
     assert(rt.comp.sameElements(l.comp) && rt.depth.sameElements(l.depth))
     assert(rt.nComp == l.nComp && rt.rootEcc.sameElements(l.rootEcc))
+    assert(rt.root.sameElements(l.root))
   }
 
   test("A7 distributed iFUB certifies large graphs the sweeps leave open") {
