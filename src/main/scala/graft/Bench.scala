@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: runs QueryDefs.benchNames (one representative
   * query per operator family) on SPARK_GRAFT_SF_DIR and prints ONE JSON
   * line {"metric":...,"queries":{name:sec,...}}. Each query is forced
@@ -46,13 +44,7 @@ object Bench {
     val loadStart = load1m
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(cpus, cpus, LocalSession.TableConfs: _*)
     spark.sparkContext.setLogLevel("WARN")
     // warm-up: JVM/codegen/parquet-footer costs land here, not on the
     // first measured query. Guarded — a missing/renamed table must not

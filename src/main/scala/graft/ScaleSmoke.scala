@@ -29,12 +29,9 @@ import graft.core._
   */
 object ScaleSmoke {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .appName("graft-scale-smoke").master("local[32]")
-    .config("spark.sql.shuffle.partitions", "64")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.driver.maxResultSize", "16g")
-    .getOrCreate()
+  private def session(): SparkSession = LocalSession("32", "64",
+    "spark.app.name" -> "graft-scale-smoke",
+    "spark.driver.maxResultSize" -> "16g")
 
   /** Raw 12-column PCHiC-shaped frame, TestMapping.interactions shape
     * (score at positional column 12). */

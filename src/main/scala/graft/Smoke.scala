@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: SparkEntry.entry
   * on sf0.001 must produce rows. Prints the count and two elements. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("8", "8", LocalSession.TableConfs: _*)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
+  StructType}
 
 /** G8: network layout — the reference enriches every served Cytoscape
   * document with `position {x,y}` by piping it through cytoscape.js's
@@ -291,7 +293,14 @@ object Layout {
     * [[coseLocal]] in its own task — parallel across components, no
     * driver state — then packed. Bounded inputs take the one-task
     * whole-layout route ([[localWholeLayout]] — bit-identical
-    * positions, LayoutSpec pins the regime equality).
+    * positions, LayoutSpec pins the regime equality). Inputs whose
+    * optimized plans are both `LocalRelation`s (a resident search's
+    * subnet, [[ResidentSnapshot]]) are already in the driver: within
+    * `localMaxRows` they are collected without a job, laid out by the
+    * same [[wholeLayout]] function in the driver and returned as a local
+    * frame — bit-identical again, and no Spark job. The plan-shape test
+    * reads the optimized plan, like [[Regime.estimatedBytes]], and
+    * costs no job.
     *
     * `nodes` must carry a column named `id` (the node key that
     * `edges`' `src`/`dst` refer to); other columns are ignored. A frame
@@ -300,36 +309,61 @@ object Layout {
   def cose(nodes: DataFrame, edges: DataFrame,
            p: CoseParams = CoseParams(),
            localMaxRows: Long = LocalLayoutMaxRows): DataFrame = {
-    // project to the columns either regime reads BEFORE checkpointing
-    // (narrower blocks), and both regimes consume each frame at least
-    // twice — the checkpoint pays for itself on either route; the
-    // routing decision is then one count job over the pinned blocks
-    val n = nodes.select(col("id")).localCheckpoint(eager = true)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(eager = true)
-    if (routingRows(n, e) <= localMaxRows)
-      localWholeLayout(n, e, p.spacing,
-        (ids, eIdx) => coseLocal(ids, eIdx, p))
-    else pack(coseRel(n, e, p), p.spacing)
+    val ids = nodes.select(col("id"))
+    val pairs = edges.select(col("src"), col("dst"))
+    val layoutOf =
+      (i: Array[String], e: Array[(Int, Int)]) => coseLocal(i, e, p)
+    driverInputs(ids, pairs, localMaxRows) match {
+      case Some((nodeIds, es)) =>
+        import scala.jdk.CollectionConverters._
+        nodes.sparkSession.createDataFrame(
+          wholeLayout(nodeIds, es, p.spacing, layoutOf).toSeq.asJava,
+          PositionSchema)
+      case None =>
+        // project to the columns either regime reads BEFORE
+        // checkpointing (narrower blocks), and both regimes consume each
+        // frame at least twice — the checkpoint pays for itself on
+        // either route; the routing decision is then one count job over
+        // the pinned blocks
+        val n = ids.localCheckpoint(eager = true)
+        val e = pairs.localCheckpoint(eager = true)
+        if (routingRows(n, e) <= localMaxRows)
+          localWholeLayout(n, e, p.spacing, layoutOf)
+        else pack(coseRel(n, e, p), p.spacing)
+    }
   }
+
+  /** The node ids and edge pairs of two frames whose optimized plans
+    * are `LocalRelation`s, when together they are at most `maxRows`
+    * rows: collecting such a plan reads driver memory and runs no job.
+    * None for any other plan. */
+  private def driverInputs(ids: DataFrame, pairs: DataFrame, maxRows: Long)
+      : Option[(Array[String], Array[(String, String)])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def local(df: DataFrame) =
+      df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    if (!local(ids) || !local(pairs)) None
+    else {
+      val nodeIds = ids.collect().map(_.getString(0))
+      val es = pairs.collect().map(r => (r.getString(0), r.getString(1)))
+      if (nodeIds.length.toLong + es.length > maxRows) None
+      else Some((nodeIds, es))
+    }
+  }
+
+  private val PositionSchema = StructType(Seq(
+    StructField("id", StringType), StructField("component", StringType),
+    StructField("x", DoubleType), StructField("y", DoubleType)))
 
   /** nodes+edges row total for regime routing as ONE job: a tag-union
     * count over the two checkpointed frames (was two count() jobs). */
   private def routingRows(n: DataFrame, e: DataFrame): Long =
     n.select(lit(1).as("one")).unionAll(e.select(lit(1).as("one"))).count()
 
-  /** The whole layout — component labels, per-component positions,
-    * grid packing — in ONE task over the tag-unioned (nodes ∪ edges)
-    * rows, replicating the relational route operation for operation:
-    * CC labels are the component-min endpoint id (UTF8 binary order,
-    * [[LocalGraph.componentLabels]] = the distributed min-label
-    * propagation); per-component ids sort exactly like coseRel's
-    * cogroup (String natural order); edges key by comp(src), dangling
-    * dst drops; `layoutOf` is the SAME per-component function the
-    * cogroup ran ([[coseLocal]] / [[coseLocalBh]] — integer-micro
-    * deterministic); packing mirrors [[pack]]'s arithmetic term for
-    * term ((cnt desc, component) rank, ceil(sqrt(ncomp)) columns,
-    * max-extent cells, integer-micro offsets). Output rows are
-    * bit-identical to pack(coseRel(...)) — LayoutSpec asserts it. */
+  /** The whole layout in ONE task over the tag-unioned (nodes ∪ edges)
+    * rows: the rows stream into [[wholeLayout]] inside a single
+    * partition. Output rows are bit-identical to pack(coseRel(...)) —
+    * LayoutSpec asserts it. */
   private def localWholeLayout(nodes: DataFrame, edges: DataFrame,
                                spacing: Long,
                                layoutOf: (Array[String], Array[(Int, Int)])
@@ -349,115 +383,126 @@ object Layout {
         if (r.getInt(0) == 0) nodeIds += r.getString(1)
         else es += ((r.getString(1), r.getString(2)))
       }
-      if (nodeIds.isEmpty) Iterator.empty
-      else {
-        import org.apache.spark.unsafe.types.UTF8String
-        // CC labels over the edge endpoints (min id, UTF8 order)
-        val lbl = new java.util.HashMap[String, String]()
-        LocalGraph.componentLabels(LocalGraph.build(
-          es.iterator.flatMap(e => Iterator(e, (e._2, e._1)))))
-          .foreach { case (id, c) => lbl.put(id, c) }
-        def compOf(id: String): String = {
-          val c = lbl.get(id); if (c == null) id else c
+      wholeLayout(nodeIds.toArray, es.toArray, spacing, layoutOf)
+    }
+    spark.createDataFrame(rows, PositionSchema).localCheckpoint(eager = true)
+  }
+
+  /** The whole layout — component labels, per-component positions,
+    * grid packing — as one pure function of the node ids and edge
+    * pairs, replicating the relational route operation for operation:
+    * CC labels are the component-min endpoint id (UTF8 binary order,
+    * [[LocalGraph.componentLabels]] = the distributed min-label
+    * propagation); per-component ids sort exactly like coseRel's
+    * cogroup (String natural order); edges key by comp(src), dangling
+    * dst drops; `layoutOf` is the SAME per-component function the
+    * cogroup ran ([[coseLocal]] / [[coseLocalBh]] — integer-micro
+    * deterministic); packing mirrors [[pack]]'s arithmetic term for
+    * term ((cnt desc, component) rank, ceil(sqrt(ncomp)) columns,
+    * max-extent cells, integer-micro offsets). Rows are (id, component,
+    * x, y); input order does not change them. */
+  private def wholeLayout(nodeIds: Array[String],
+                          es: Array[(String, String)], spacing: Long,
+                          layoutOf: (Array[String], Array[(Int, Int)])
+                            => Array[(Long, Long)])
+      : Iterator[org.apache.spark.sql.Row] =
+    if (nodeIds.isEmpty) Iterator.empty
+    else {
+      import org.apache.spark.unsafe.types.UTF8String
+      // CC labels over the edge endpoints (min id, UTF8 order)
+      val lbl = new java.util.HashMap[String, String]()
+      LocalGraph.componentLabels(LocalGraph.build(
+        es.iterator.flatMap(e => Iterator(e, (e._2, e._1)))))
+        .foreach { case (id, c) => lbl.put(id, c) }
+      def compOf(id: String): String = {
+        val c = lbl.get(id); if (c == null) id else c
+      }
+      val nodeSet = new java.util.HashSet[String]()
+      nodeIds.foreach(nodeSet.add)
+      // group node ids / edges per component (coseRel's cogroup)
+      val nByC = new java.util.HashMap[String,
+        scala.collection.mutable.ArrayBuffer[String]]()
+      nodeIds.foreach { id =>
+        val c = compOf(id)
+        var b = nByC.get(c)
+        if (b == null) {
+          b = new scala.collection.mutable.ArrayBuffer[String]()
+          nByC.put(c, b)
         }
-        val nodeSet = new java.util.HashSet[String]()
-        nodeIds.foreach(nodeSet.add)
-        // group node ids / edges per component (coseRel's cogroup)
-        val nByC = new java.util.HashMap[String,
-          scala.collection.mutable.ArrayBuffer[String]]()
-        nodeIds.foreach { id =>
-          val c = compOf(id)
-          var b = nByC.get(c)
+        b += id
+      }
+      val eByC = new java.util.HashMap[String,
+        scala.collection.mutable.ArrayBuffer[(String, String)]]()
+      es.foreach { case (s, d) =>
+        if (nodeSet.contains(s)) { // inner join on comp(src)
+          val c = compOf(s)
+          var b = eByC.get(c)
           if (b == null) {
-            b = new scala.collection.mutable.ArrayBuffer[String]()
-            nByC.put(c, b)
+            b = new scala.collection.mutable.ArrayBuffer[(String, String)]()
+            eByC.put(c, b)
           }
-          b += id
+          b += ((s, d))
         }
-        val eByC = new java.util.HashMap[String,
-          scala.collection.mutable.ArrayBuffer[(String, String)]]()
-        es.foreach { case (s, d) =>
-          if (nodeSet.contains(s)) { // inner join on comp(src)
-            val c = compOf(s)
-            var b = eByC.get(c)
-            if (b == null) {
-              b = new scala.collection.mutable.ArrayBuffer[(String, String)]()
-              eByC.put(c, b)
-            }
-            b += ((s, d))
-          }
+      }
+      // per-component layout — parallel over components (the common
+      // pool; results are per-component pure, order re-imposed below)
+      val comps = {
+        import scala.jdk.CollectionConverters._
+        nByC.keySet().iterator().asScala.toArray
+      }
+      val perComp = new Array[(String, Array[String],
+        Array[(Long, Long)])](comps.length)
+      java.util.stream.IntStream.range(0, comps.length).parallel()
+        .forEach { ci =>
+          val c = comps(ci)
+          val ids = nByC.get(c).toArray.sorted // String order = cogroup
+          val idx = ids.zipWithIndex.toMap
+          val ebuf = eByC.get(c)
+          val eIdx =
+            if (ebuf == null) Array.empty[(Int, Int)]
+            else ebuf.iterator.flatMap { case (s, d) =>
+              idx.get(d).map(b => (idx(s), b)) }.toArray
+          perComp(ci) = (c, ids, layoutOf(ids, eIdx))
         }
-        // per-component layout — parallel over components (the common
-        // pool; results are per-component pure, order re-imposed below)
-        val comps = {
-          import scala.jdk.CollectionConverters._
-          nByC.keySet().iterator().asScala.toArray
+      // pack, mirroring [[pack]]'s arithmetic: per-component extents,
+      // (cnt desc, component asc UTF8) rank, ceil(sqrt(ncomp)) grid
+      val ext = perComp.map { case (c, ids, pos) =>
+        var minx = Long.MaxValue; var maxx = Long.MinValue
+        var miny = Long.MaxValue; var maxy = Long.MinValue
+        pos.foreach { case (x, y) =>
+          if (x < minx) minx = x; if (x > maxx) maxx = x
+          if (y < miny) miny = y; if (y > maxy) maxy = y
         }
-        val perComp = new Array[(String, Array[String],
-          Array[(Long, Long)])](comps.length)
-        java.util.stream.IntStream.range(0, comps.length).parallel()
-          .forEach { ci =>
-            val c = comps(ci)
-            val ids = nByC.get(c).toArray.sorted // String order = cogroup
-            val idx = ids.zipWithIndex.toMap
-            val ebuf = eByC.get(c)
-            val eIdx =
-              if (ebuf == null) Array.empty[(Int, Int)]
-              else ebuf.iterator.flatMap { case (s, d) =>
-                idx.get(d).map(b => (idx(s), b)) }.toArray
-            perComp(ci) = (c, ids, layoutOf(ids, eIdx))
-          }
-        // pack, mirroring [[pack]]'s arithmetic: per-component extents,
-        // (cnt desc, component asc UTF8) rank, ceil(sqrt(ncomp)) grid
-        val ext = perComp.map { case (c, ids, pos) =>
-          var minx = Long.MaxValue; var maxx = Long.MinValue
-          var miny = Long.MaxValue; var maxy = Long.MinValue
-          pos.foreach { case (x, y) =>
-            if (x < minx) minx = x; if (x > maxx) maxx = x
-            if (y < miny) miny = y; if (y > maxy) maxy = y
-          }
-          (c, minx, maxx, miny, maxy, ids.length.toLong)
-        }
-        val ranked = ext.sortWith { (a, b) =>
-          if (a._6 != b._6) a._6 > b._6
-          else UTF8String.fromString(a._1)
-            .compareTo(UTF8String.fromString(b._1)) < 0
-        }
-        val ncomp = ranked.length.toLong
-        var maxw = Long.MinValue; var maxh = Long.MinValue
-        ranked.foreach { e =>
-          if (e._3 - e._2 > maxw) maxw = e._3 - e._2
-          if (e._5 - e._4 > maxh) maxh = e._5 - e._4
-        }
-        val ncols = math.ceil(math.sqrt(ncomp.toDouble)).toLong
-        val cellw = maxw + spacing * Micro
-        val cellh = maxh + spacing * Micro
-        val off = new java.util.HashMap[String, (Long, Long)]()
-        ranked.zipWithIndex.foreach { case ((c, minx, _, miny, _, _), i) =>
-          val idxL = i.toLong
-          off.put(c, ((idxL % ncols) * cellw - minx,
-            math.floor(idxL.toDouble / ncols).toLong * cellh - miny))
-        }
-        perComp.iterator.flatMap { case (c, ids, pos) =>
-          val (ox, oy) = off.get(c)
-          ids.iterator.zip(pos.iterator).map { case (id, (x, y)) =>
-            org.apache.spark.sql.Row(id, c,
-              (x + ox).toDouble / MicroD, (y + oy).toDouble / MicroD)
-          }
+        (c, minx, maxx, miny, maxy, ids.length.toLong)
+      }
+      val ranked = ext.sortWith { (a, b) =>
+        if (a._6 != b._6) a._6 > b._6
+        else UTF8String.fromString(a._1)
+          .compareTo(UTF8String.fromString(b._1)) < 0
+      }
+      val ncomp = ranked.length.toLong
+      var maxw = Long.MinValue; var maxh = Long.MinValue
+      ranked.foreach { e =>
+        if (e._3 - e._2 > maxw) maxw = e._3 - e._2
+        if (e._5 - e._4 > maxh) maxh = e._5 - e._4
+      }
+      val ncols = math.ceil(math.sqrt(ncomp.toDouble)).toLong
+      val cellw = maxw + spacing * Micro
+      val cellh = maxh + spacing * Micro
+      val off = new java.util.HashMap[String, (Long, Long)]()
+      ranked.zipWithIndex.foreach { case ((c, minx, _, miny, _, _), i) =>
+        val idxL = i.toLong
+        off.put(c, ((idxL % ncols) * cellw - minx,
+          math.floor(idxL.toDouble / ncols).toLong * cellh - miny))
+      }
+      perComp.iterator.flatMap { case (c, ids, pos) =>
+        val (ox, oy) = off.get(c)
+        ids.iterator.zip(pos.iterator).map { case (id, (x, y)) =>
+          org.apache.spark.sql.Row(id, c,
+            (x + ox).toDouble / MicroD, (y + oy).toDouble / MicroD)
         }
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("y",
-        org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(rows, schema).localCheckpoint(eager = true)
-  }
 
   /** [[cose]] before packing: per-component micro positions
     * (component, id, x_micro, y_micro) — the form [[coseRouted]]

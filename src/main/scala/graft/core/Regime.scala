@@ -18,6 +18,14 @@ import org.apache.spark.sql.DataFrame
   *                                  (`BhMinNodes`/`BhLocalMaxNodes`)
   *   - t16       TextOps.bpeCore    `localMaxWords` (distinct words)
   *   - s11       Pipeline           `DocStreamMaxEdges`
+  *   - q5/q6     Serving.open       `residentMaxEdges` (snapshot edge
+  *                                  rows, [[ResidentMaxEdges]]): at or
+  *                                  below it requests answer in the
+  *                                  driver; above it over pinned frames
+  *   - g8        Layout.cose        plan shape: inputs whose optimized
+  *                                  plans are `LocalRelation`s (a
+  *                                  resident search's subnet) lay out in
+  *                                  the driver, within `localMaxRows`
   *
   * Routing picks a regime and nothing else: no branch writes session
   * conf (shuffle width, AQE), so every regime runs at the session's
@@ -34,6 +42,16 @@ import org.apache.spark.sql.DataFrame
   * only the small-regime constant factor, never correctness.
   */
 object Regime {
+
+  /** Snapshot edge rows at or below which [[Serving.open]] also keeps a
+    * driver-resident copy and answers requests with no Spark job: ~3x
+    * the reference's largest dataset (Human Monocyte, 171k edges / 96k
+    * nodes; BASELINE.md). The copy measured 10.6 MB (Spark's
+    * SizeEstimator) for 15.5k edges / 9.9k nodes, so the cutoff bounds
+    * it near 350 MB of driver heap at that node/edge ratio. Above it the
+    * pinned frames serve (relational joins), and the
+    * chromosome-partitioned snapshot is the at-scale form. */
+  val ResidentMaxEdges = 500000L
 
   /** Catalyst's estimated size of the frame in bytes — read from the
     * optimized logical plan's statistics; never launches a job. */

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The user-facing query surface (SURVEY §2.6): a search string
@@ -33,13 +33,31 @@ object Search {
   /** Q2 gene-symbol search: case-insensitive word-boundary regex over
     * gene_names ⧺ alias. Reference regex "\btern\b" at
     * network_generator_lib.R:112. */
-  def byGeneName(vertices: DataFrame, term: String): DataFrame = {
-    val esc = java.util.regex.Pattern.quote(term.toLowerCase)
-    val hay = lower(concat_ws(" ", col("gene_names"),
-      if (vertices.columns.contains("alias")) col("alias") else lit("")))
-    vertices.filter(hay.rlike("\\b" + esc + "\\b"))
+  def byGeneName(vertices: DataFrame, term: String): DataFrame =
+    vertices.filter(haystack(vertices).rlike(nameRegex(term)))
       .select(col("fragment").as("id"))
-  }
+
+  /** The Q2/Q4 haystack: lower-cased gene_names ⧺ " " ⧺ alias (alias
+    * when the frame has one). */
+  def haystack(vertices: DataFrame): Column =
+    lower(concat_ws(" ", col("gene_names"),
+      if (vertices.columns.contains("alias")) col("alias") else lit("")))
+
+  /** Q2's pattern: the lower-cased term as a literal between word
+    * boundaries. A Java regex, matched with `Matcher.find` as Spark's
+    * `rlike` does, so a driver-side match agrees with the plan's. */
+  def nameRegex(term: String): String =
+    "\\b" + java.util.regex.Pattern.quote(term.toLowerCase) + "\\b"
+
+  /** Q4's pattern: one alternation of every non-empty term. */
+  def listRegex(terms: Seq[String]): String =
+    "\\b(" + terms.filter(_.nonEmpty)
+      .map(t => java.util.regex.Pattern.quote(t.toLowerCase))
+      .mkString("|") + ")\\b"
+
+  /** True when the name index answers `term` exactly: a word-only term,
+    * whose \b-bounded match is token equality. */
+  def indexable(term: String): Boolean = term.toLowerCase.matches("\\w+")
 
   /** Token inverted index over gene_names ⧺ alias: DF(token, fragment),
     * distinct. Build once per dataset snapshot (persist it — or bucket
@@ -48,19 +66,17 @@ object Search {
     * non-word runs, which makes token equality EXACTLY the \b-bounded
     * regex semantics of [[byGeneName]] for word-only terms; terms
     * containing non-word characters take the regex path. */
-  def buildNameIndex(vertices: DataFrame): DataFrame = {
-    val hay = lower(concat_ws(" ", col("gene_names"),
-      if (vertices.columns.contains("alias")) col("alias") else lit("")))
-    vertices.select(col("fragment"), explode(split(hay, "\\W+")).as("token"))
+  def buildNameIndex(vertices: DataFrame): DataFrame =
+    vertices.select(col("fragment"),
+        explode(split(haystack(vertices), "\\W+")).as("token"))
       .filter(col("token") =!= "")
       .distinct()
-  }
 
   /** Q2 via the inverted index: one equi-lookup. Falls back to the
     * regex scan for terms token-splitting can't express. */
   def byGeneNameIndexed(index: DataFrame, vertices: DataFrame,
                         term: String): DataFrame =
-    if (!term.toLowerCase.matches("\\w+")) byGeneName(vertices, term)
+    if (!indexable(term)) byGeneName(vertices, term)
     else index.filter(col("token") === lit(term.toLowerCase))
       .select(col("fragment").as("id")).distinct()
 
@@ -68,7 +84,7 @@ object Search {
   def byGeneListIndexed(index: DataFrame, vertices: DataFrame,
                         terms: Seq[String]): DataFrame = {
     val (simple, complex) = terms.filter(_.nonEmpty)
-      .map(_.toLowerCase).partition(_.matches("\\w+"))
+      .map(_.toLowerCase).partition(indexable)
     val viaIndex = index.filter(col("token").isin(simple: _*))
       .select(col("fragment").as("id"))
     val all = if (complex.isEmpty) viaIndex
@@ -80,25 +96,22 @@ object Search {
     * The map is dimension-sized → collected & inlined (one driver value),
     * matching the reference's broadcast-lookup shape. */
   def byEnsemblId(vertices: DataFrame, ensembl2name: DataFrame,
-                  id: String): DataFrame = {
-    val hit = ensembl2name
-      .filter(col("ensembl_id") === lit(id.toLowerCase))
-      .select("gene_name").limit(1).collect()
-    if (hit.isEmpty) vertices.limit(0).select(col("fragment").as("id"))
-    else byGeneName(vertices, hit(0).getString(0))
-  }
+                  id: String): DataFrame =
+    ensemblName(ensembl2name, id) match {
+      case Some(name) => byGeneName(vertices, name)
+      case None => vertices.limit(0).select(col("fragment").as("id"))
+    }
+
+  /** The gene name an Ensembl id translates to: one collected row. */
+  def ensemblName(ensembl2name: DataFrame, id: String): Option[String] =
+    ensembl2name.filter(col("ensembl_id") === lit(id.toLowerCase))
+      .select("gene_name").limit(1).collect().headOption.map(_.getString(0))
 
   /** Q4 gene-list search: one combined alternation regex — a single
     * scan instead of one per term. */
-  def byGeneList(vertices: DataFrame, terms: Seq[String]): DataFrame = {
-    val alternation = terms.filter(_.nonEmpty)
-      .map(t => java.util.regex.Pattern.quote(t.toLowerCase))
-      .mkString("|")
-    val hay = lower(concat_ws(" ", col("gene_names"),
-      if (vertices.columns.contains("alias")) col("alias") else lit("")))
-    vertices.filter(hay.rlike("\\b(" + alternation + ")\\b"))
+  def byGeneList(vertices: DataFrame, terms: Seq[String]): DataFrame =
+    vertices.filter(haystack(vertices).rlike(listRegex(terms)))
       .select(col("fragment").as("id"))
-  }
 
   /** Q5 genomic-range search: overlap (± expand), fallback/explicit
     * nearest; NO ego expansion (reference keeps only overlapping
@@ -106,10 +119,7 @@ object Search {
     * network_generator_lib.R:184-189). */
   def byRange(vertices: DataFrame, range: String, expand: Long,
               nearest: Boolean): DataFrame = {
-    val parts = range.split("[:\\-]")
-    val chr = parts(0).toUpperCase
-    val start = parts(1).toLong
-    val end = if (parts.length > 2) parts(2).toLong else start
+    val (chr, start, end) = rangeBounds(range)
     // seed sets are tiny: materialize once (localCheckpoint) so the
     // emptiness probe and the returned plan don't re-run the scan
     val overlap = Intervals.probeOverlap(vertices, chr, start, end, expand)
@@ -121,6 +131,34 @@ object Search {
     else overlap
   }
 
+  /** A search string sorted into the reference dispatcher's forms,
+    * tested in its order (network_generator_lib.R:212-231). */
+  sealed trait Form
+  final case class FragmentForm(id: String) extends Form
+  final case class EnsemblForm(id: String) extends Form
+  final case class RangeForm(range: String) extends Form
+  final case class ListForm(terms: Seq[String]) extends Form
+  final case class NameForm(term: String) extends Form
+
+  def parse(query: String): Form = {
+    val q = query.trim
+    val terms = q.split(ListSplitRe)
+    if (q.matches(FragmentIdRe)) FragmentForm(q)
+    else if (q.toLowerCase.matches(EnsemblRe)) EnsemblForm(q)
+    else if (q.matches(RangeRe)) RangeForm(q)
+    else if (terms.length > 1) ListForm(terms.toSeq)
+    else NameForm(q)
+  }
+
+  /** "chr:start[-end]" → (upper-cased chr, start, end); a bare
+    * position is the one-base range start..start. */
+  def rangeBounds(range: String): (String, Long, Long) = {
+    val parts = range.split("[:\\-]")
+    val start = parts(1).toLong
+    (parts(0).toUpperCase, start,
+      if (parts.length > 2) parts(2).toLong else start)
+  }
+
   /** Full dispatcher: regex-dispatch the search string, expand seeds to
     * the result subnetwork (ego for id/name forms; induced-only for
     * range), tag seeds `searched`, recompute per-subnet degree (Q6).
@@ -128,20 +166,16 @@ object Search {
   def search(vertices: DataFrame, edgesDf: DataFrame,
              ensembl2nameDf: Option[DataFrame], query: String,
              expand: Long = 0L, nearest: Boolean = false): Subnet = {
-    val q = query.trim
-    val lower_q = q.toLowerCase
-    val (seeds, egoExpand) =
-      if (q.matches(FragmentIdRe))
-        (byFragmentId(vertices, q), true)
-      else if (lower_q.matches(EnsemblRe))
-        (ensembl2nameDf.map(m => byEnsemblId(vertices, m, q))
+    val (seeds, egoExpand) = parse(query) match {
+      case FragmentForm(id) => (byFragmentId(vertices, id), true)
+      case EnsemblForm(id) =>
+        (ensembl2nameDf.map(m => byEnsemblId(vertices, m, id))
           .getOrElse(vertices.limit(0).select(col("fragment").as("id"))), true)
-      else if (q.matches(RangeRe))
-        (byRange(vertices, q, expand, nearest), false)
-      else if (q.split(ListSplitRe).length > 1)
-        (byGeneList(vertices, q.split(ListSplitRe).toSeq), true)
-      else
-        (byGeneName(vertices, q), true)
+      case RangeForm(range) =>
+        (byRange(vertices, range, expand, nearest), false)
+      case ListForm(terms) => (byGeneList(vertices, terms), true)
+      case NameForm(term) => (byGeneName(vertices, term), true)
+    }
     subnetFromSeeds(vertices, edgesDf, seeds, egoExpand)
   }
 

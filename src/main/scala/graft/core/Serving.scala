@@ -9,19 +9,30 @@ import org.apache.spark.storage.StorageLevel
   * writes it at build time). Here the snapshot is columnar parquet
   * ([[graft.io.Readers.snapshot]]) of the annotated nodes + simplified
   * edges PLUS the Q2/Q4 token inverted index ([[Search.buildNameIndex]]),
-  * opened once and pinned in executor memory: an interactive gene
-  * search is then an index equi-lookup + bounded ego joins over cached
-  * frames — no re-run of the TSV scan / annotation / simplify
-  * pipeline per request. At 100 TB the same layout holds: the
-  * snapshot is partition-prunable parquet, the index is bucketable by
-  * token, and nothing in the serve path scans the raw input.
+  * opened once — no re-run of the TSV scan / annotation / simplify
+  * pipeline per request. [[open]] routes on the snapshot's edge count:
+  *   - at or below [[Regime.ResidentMaxEdges]] it also collects a
+  *     driver-resident copy ([[ResidentSnapshot]]), and [[search]] /
+  *     [[geneSearch]] answer every request form in the driver as local
+  *     frames — a request, its render and its CoSE layout run no Spark
+  *     job, like the reference's in-process network;
+  *   - above it a request is an index equi-lookup + bounded ego joins
+  *     over the frames pinned in executor memory.
+  * The pinned frames stay in both regimes: the batched
+  * [[geneSearchDocs]] (the S12/E11 response caches) and the g8 layout
+  * lanes' subnet read them. At 100 TB the chromosome-partitioned
+  * snapshot ([[openPartitioned]]) is the form: partition-prunable
+  * parquet, an index bucketable by token, and nothing in the serve
+  * path scans the raw input.
   */
 object Serving {
 
   /** An opened snapshot: all three frames persisted and materialized
-    * (the open cost is paid once, not on the first query). */
+    * (the open cost is paid once, not on the first query), and the
+    * driver-resident copy when the snapshot is under the cutoff. */
   case class ServedDataset(nodes: DataFrame, edges: DataFrame,
-                           index: DataFrame)
+                           index: DataFrame,
+                           resident: Option[ResidentSnapshot] = None)
 
   /** Build-time: write the serving snapshot (nodes, edges, name index)
     * under `dir`. One-off cost per dataset build, amortized over every
@@ -40,16 +51,25 @@ object Serving {
   }
 
   /** Serve-time: open a snapshot, pin all three frames, and force
-    * materialization so the first user query is already warm. */
-  def open(spark: SparkSession, dir: String): ServedDataset = {
+    * materialization so the first user query is already warm. A
+    * snapshot of at most `residentMaxEdges` edges is also collected into
+    * its driver-resident form; `residentMaxEdges = 0` forces the
+    * relational form (the `localMaxEdges = 0` convention). */
+  def open(spark: SparkSession, dir: String,
+           residentMaxEdges: Long = Regime.ResidentMaxEdges): ServedDataset = {
     def pin(path: String) = {
       val df = graft.io.Readers.loadSnapshot(spark, path)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      (df, df.count())
     }
-    ServedDataset(pin(s"$dir/nodes"), pin(s"$dir/edges"),
-      pin(s"$dir/name_index"))
+    val (nodes, _) = pin(s"$dir/nodes")
+    val (edges, edgeCount) = pin(s"$dir/edges")
+    val (index, _) = pin(s"$dir/name_index")
+    val resident =
+      if (residentMaxEdges > 0L && edgeCount <= residentMaxEdges)
+        Some(ResidentSnapshot.collect(nodes, edges, index))
+      else None
+    ServedDataset(nodes, edges, index, resident)
   }
 
   // -------------------------------------------------------------------
@@ -138,7 +158,7 @@ object Serving {
                   expand: Long = 0L, nearest: Boolean = false)
       : Search.Subnet = {
     import org.apache.spark.sql.functions._
-    val chr = range.split("[:\\-]")(0).toUpperCase
+    val (chr, _, _) = Search.rangeBounds(range)
     val nodes = ps.nodes.filter(col("chr") === lit(chr))
     val edges = ps.edges
       .filter(col("src_chr") === lit(chr) && col("dst_chr") === lit(chr))
@@ -189,28 +209,32 @@ object Serving {
     * row-identical to the rebuild-everything path
     * ([[Search.subnetFromSeeds]] over freshly derived frames), which
     * the q6_search_served gate entry pins against the same oracle as
-    * q6_search_subnet. */
+    * q6_search_subnet. Resident snapshots answer in the driver. */
   def geneSearch(sd: ServedDataset, term: String): Search.Subnet =
-    Search.subnetFromSeeds(sd.nodes, sd.edges,
-      Search.byGeneNameIndexed(sd.index, sd.nodes, term), ego = true)
+    sd.resident match {
+      case Some(r) => r.geneSearch(term)
+      case None =>
+        Search.subnetFromSeeds(sd.nodes, sd.edges,
+          Search.byGeneNameIndexed(sd.index, sd.nodes, term), ego = true)
+    }
 
   /** The FULL reference dispatcher served from a snapshot: fragment-id
-    * / ensembl / range / gene-list / gene-name forms all route over
-    * the pinned frames ([[Search.search]] semantics verbatim); the
-    * single-term name form additionally takes the inverted-index fast
-    * path. One entry point = the reference's per-request API
+    * / ensembl / range / gene-list / gene-name forms ([[Search.search]]
+    * semantics verbatim); the single-term name form takes the
+    * inverted-index fast path. A resident snapshot answers every form
+    * in the driver (the Ensembl form still runs its one-row map lookup
+    * over `ensembl2name`); otherwise the forms route over the pinned
+    * frames. One entry point = the reference's per-request API
     * (search_query.R:19-27) minus the rebuild. */
   def search(sd: ServedDataset, query: String,
              ensembl2name: Option[DataFrame] = None,
-             expand: Long = 0L, nearest: Boolean = false): Search.Subnet = {
-    val q = query.trim
-    val isPlainName = !q.matches(Search.FragmentIdRe) &&
-      !q.toLowerCase.matches(Search.EnsemblRe) &&
-      !q.matches(Search.RangeRe) &&
-      q.split(Search.ListSplitRe).length == 1
-    if (isPlainName) geneSearch(sd, q)
-    else Search.search(sd.nodes, sd.edges, ensembl2name, q, expand, nearest)
-  }
+             expand: Long = 0L, nearest: Boolean = false): Search.Subnet =
+    (sd.resident, Search.parse(query)) match {
+      case (Some(r), form) => r.search(form, ensembl2name, expand, nearest)
+      case (None, Search.NameForm(term)) => geneSearch(sd, term)
+      case (None, _) =>
+        Search.search(sd.nodes, sd.edges, ensembl2name, query, expand, nearest)
+    }
 
   /** A BATCH of gene-name searches served end-to-end as ONE relational
     * plan: every key (a single-token gene name) resolves through the
@@ -317,14 +341,6 @@ object Serving {
         col("id").cast("string").as("response"))
   }
 
-  /** One serve-and-remember round against a parquet memo dir: open,
-    * serve, append the fresh entries (so the NEXT batch — or a
-    * restarted service — skips every key this one computed). The
-    * compute plan is materialized ONCE via localCheckpoint before
-    * anything downstream touches it: both the served responses and the
-    * memo append read the same checkpointed frame, so a
-    * nondeterministic compute (the reference's R-pipeline analogue)
-    * cannot store a response that differs from the one served. */
   /** Bucketed symmetric-edge snapshot — the CO-LOCATED join layout
     * for src-keyed workloads: `bucketBy(src)` + `sortBy(src)` via
     * saveAsTable, so every src-keyed equi-join (incl. the edge⋈edge
@@ -344,6 +360,14 @@ object Serving {
       .bucketBy(buckets, "src").sortBy("src")
       .mode("overwrite").saveAsTable(tableName)
 
+  /** One serve-and-remember round against a parquet memo dir: open,
+    * serve, append the fresh entries (so the NEXT batch — or a
+    * restarted service — skips every key this one computed). The
+    * compute plan is materialized ONCE via localCheckpoint before
+    * anything downstream touches it: both the served responses and the
+    * memo append read the same checkpointed frame, so a
+    * nondeterministic compute (the reference's R-pipeline analogue)
+    * cannot store a response that differs from the one served. */
   def serveCachedDir(requests: DataFrame, dir: String,
                      compute: DataFrame => DataFrame): DataFrame = {
     val spark = requests.sparkSession

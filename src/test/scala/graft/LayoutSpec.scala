@@ -101,9 +101,10 @@ class LayoutSpec extends SparkSpec {
     val local = posMap(Layout.cose(nodes, edges))
     val dist = posMap(Layout.coseDistributed(nodes, edges))
     assert(local == dist)
-    // r14: the default one-task WHOLE-layout route (components +
-    // layout + pack in one task) vs the cogroup-per-component route
-    // forced with localMaxRows = 0 — bit-identical rows
+    // r14: the default WHOLE-layout route (components + layout + pack
+    // in one pass; these local frames take its driver form) vs the
+    // cogroup-per-component route forced with localMaxRows = 0 —
+    // bit-identical rows
     val cogrouped = posMap(Layout.cose(nodes, edges, CoseParams(),
       localMaxRows = 0L))
     assert(local == cogrouped)
@@ -111,6 +112,23 @@ class LayoutSpec extends SparkSpec {
     val bhCogrouped = posMap(Layout.coseLocalBarnesHut(nodes, edges,
       localMaxRows = 0L))
     assert(bhWhole == bhCogrouped)
+  }
+
+  test("G8 cose over local frames: driver route is bit-identical, no job") {
+    // nodes/edges are local Seqs (LocalRelation plans): cose lays them
+    // out in the driver; repartitioned copies take the checkpointed
+    // one-task route; pack(coseRel) is the cogroup-per-component route
+    val p = CoseParams()
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0),
+      r.getString(1), r.getDouble(2), r.getDouble(3))).toSet
+    val (driver, jobs) = org.apache.spark.graft.JobCount.of(
+      spark.sparkContext)(rows(Layout.cose(nodes, edges, p)))
+    assert(jobs == 0, s"driver route ran $jobs Spark jobs")
+    assert(driver.size == 6)
+    assert(driver == rows(Layout.cose(nodes.repartition(2),
+      edges.repartition(2), p)))
+    assert(driver == rows(Layout.pack(Layout.coseRel(nodes, edges, p),
+      p.spacing)))
   }
 
   test("G8 BH interaction lists partition every pair exactly once") {
