@@ -3667,6 +3667,9 @@ FROM read_parquet('$fxRoot/s9_snapshot/*/*.parquet', hive_partitioning=true)""")
     "a6_components_inc_served" -> graph("a6_components"),
     "a7_diameter_dist" -> graph("a7_diameter"),
     "g6_randomize_dist" -> randomizeOracles("g6_randomize"),
+    // the relational twins of the driver-resident ChAs layers
+    "a15_feature_agg_proportion_dist" -> graph("a15_feature_agg_proportion"),
+    "a17_features_metadata_dist" -> randomizeOracles("a17_features_metadata"),
     // distributedDocs=Some(true): chr<c>.json becomes a part-file
     // directory; the logical listing collapses it, so the stream
     // writer's expected file set applies unchanged

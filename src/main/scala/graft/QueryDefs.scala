@@ -182,10 +182,21 @@ object QueryDefs {
           proportion = true)
         .select(col("fragment"), col("feature"),
           Num.roundLike(col("value"), 6).as("value"))),
+    // residentMaxEdges = 0 pins the relational bucketed overlap join:
+    // sf0.01/0.1 inputs take the driver route
+    "a15_feature_agg_proportion_dist" -> ((s, d) =>
+      Chas.aggregateOntoFragments(verts(s, d), featureIntervals(s, d),
+          proportion = true, residentMaxEdges = 0L)
+        .select(col("fragment"), col("feature"),
+          Num.roundLike(col("value"), 6).as("value"))),
     "a16_binarize" -> ((s, d) => Chas.binarize(features(s, d))),
     "a17_features_metadata" -> ((s, d) =>
       Chas.featuresMetadataSubnets(typed(s, d), features(s, d),
         nReplicates = 3, seed = 42L)),
+    // residentMaxEdges = 0 pins the relational statistics and envelope
+    "a17_features_metadata_dist" -> ((s, d) =>
+      Chas.featuresMetadataSubnets(typed(s, d), features(s, d),
+        nReplicates = 3, seed = 42L, residentMaxEdges = 0L)),
     "j1_join_features" -> ((s, d) =>
       Annotate.joinFeatures(verts(s, d), features(s, d))),
     "j2_bait_names" -> ((s, d) =>
@@ -2194,7 +2205,9 @@ object QueryDefs {
       ("variant of a benched family lane" -> Seq(
         "a6_component_stats", "a6_components_dist", "a15_feature_agg_min",
         "a15_feature_agg_max", "a15_feature_agg_proportion",
-        "a16_binarize", "a17_features_metadata", "d1_exact_dedup",
+        "a15_feature_agg_proportion_dist",
+        "a16_binarize", "a17_features_metadata",
+        "a17_features_metadata_dist", "d1_exact_dedup",
         "d3_simhash", "d4_ngram_jaccard", "d6_shared_substring",
         "d16_exact_spans", "d16_exact_spans_dist",
         "d16_incremental_served_dist",

@@ -121,14 +121,41 @@ object Chas {
     * featureIntervals: DF(chr, start, end, feature, value).
     * auxfun is an enum-dispatched builtin — the reference's string-eval
     * of a function name is a security bug not reproduced (SURVEY §2.8).
+    *
+    * When both inputs have at most `residentMaxEdges` rows (the upload's
+    * shape: a dataset's fragments and one feature file), the aggregation
+    * runs in the driver ([[ResidentChas.aggregate]]: a sorted sweep per
+    * chromosome) and comes back as a local frame; `0` forces the
+    * relational form below, the at-scale one.
     */
   def aggregateOntoFragments(fragments: DataFrame, featureIntervals: DataFrame,
                              auxfun: String = "mean",
                              missingValue: Double = 0.0,
                              proportion: Boolean = false,
-                             bucketWidth: Long = Intervals.DefaultBucketWidth): DataFrame = {
-    val joined = Intervals.overlapJoin(
-      fragments.select("fragment", "chr", "start", "end"),
+                             bucketWidth: Long = Intervals.DefaultBucketWidth,
+                             residentMaxEdges: Long = Regime.ResidentMaxEdges)
+      : DataFrame = {
+    if (!proportion && !Set("mean", "min", "max")(auxfun))
+      throw new IllegalArgumentException(
+        s"auxfun must be mean|min|max, got $auxfun")
+    val frags = fragments.select("fragment", "chr", "start", "end")
+    val resident = Regime.collectAtMost(residentMaxEdges, frags,
+        featureIntervals.select("chr", "start", "end", "feature", "value"))
+      .map(in => ResidentChas.aggregate(in(0), in(1), auxfun, missingValue,
+        proportion))
+    resident match {
+      case Some(rows) => fragments.sparkSession.createDataFrame(rows,
+        ResidentChas.AggregateSchema)
+      case None => aggregateRel(frags, featureIntervals, auxfun,
+        missingValue, proportion, bucketWidth)
+    }
+  }
+
+  private def aggregateRel(frags: DataFrame, featureIntervals: DataFrame,
+                           auxfun: String, missingValue: Double,
+                           proportion: Boolean, bucketWidth: Long)
+      : DataFrame = {
+    val joined = Intervals.overlapJoin(frags,
       featureIntervals, rightPrefix = "f_", joinType = "inner",
       bucketWidth = bucketWidth)
     val agged =
@@ -167,9 +194,7 @@ object Chas {
         val aggExpr = auxfun match {
           case "mean" => avg(col("f_value"))
           case "min"  => min(col("f_value"))
-          case "max"  => max(col("f_value"))
-          case other  => throw new IllegalArgumentException(
-            s"auxfun must be mean|min|max, got $other")
+          case _      => max(col("f_value"))
         }
         joined.groupBy(col("fragment"), col("f_feature").as("feature"))
           .agg(aggExpr.as("value"))
@@ -177,7 +202,7 @@ object Chas {
     // missing fill: fragments × features seen, minus covered → missingv.
     // Features cardinality is tiny (column names); crossJoin(broadcast).
     val featNames = featureIntervals.select(col("feature")).distinct()
-    fragments.select(col("fragment"))
+    frags.select(col("fragment"))
       .crossJoin(broadcast(featNames))
       .join(agged, Seq("fragment", "feature"), "left")
       .select(col("fragment"), col("feature"),
@@ -209,13 +234,15 @@ object Chas {
     * bins (chaser's dist.match approximation); edges must then carry
     * coordinates parseable from the fragment id (chr_start_end).
     */
-  /** Bounded-regime cutoff for the swap chain, in PER-REPLICA edge
-    * rows: at or below this, each replica's whole chain runs in one
-    * task ([[LocalChain]], bit-identical to the distributed rounds —
-    * replicas are independent, so the local route still fans
-    * nReplicates tasks wide). 5M rows of (src, dst, bin) strings is a
-    * few hundred MB of task heap; above it the windowed rounds take
-    * over. */
+  /** Bounded-regime cutoff for the relational swap chain, in
+    * PER-REPLICA edge rows: at or below this, each (replica, group)
+    * chain runs in one executor task ([[LocalChain]], bit-identical to
+    * the distributed rounds — replicas are independent, so the local
+    * route still fans nReplicates × groups tasks wide). 5M rows of
+    * (src, dst, bin) strings is a few hundred MB of task heap; above it
+    * the windowed rounds take over. A [[featuresMetadataSubnets]] input
+    * within [[Regime.ResidentMaxEdges]] never reaches this chain: its
+    * driver route calls [[LocalChain.runReplica]] itself. */
   private[graft] val LocalMaxChainRows = 5000000L
 
   def randomize(edges: DataFrame, nReplicates: Int, seed: Long,
@@ -448,10 +475,40 @@ object Chas {
     * grouped by (subnet, feature). The reference materializes the cross
     * three times sequentially (network_generator.R:255-266); at 100 TB
     * the tag column turns that into one shuffle per statistic.
-    * typedEdges: DF(src, dst, ..., type in {P-P, P-O}). */
+    * typedEdges: DF(src, dst, ..., type in {P-P, P-O}).
+    *
+    * When both inputs have at most `residentMaxEdges` rows and there is
+    * no distance matching, the whole replicate set — observed ChAs,
+    * abundance, mean degree and the envelope, one [[LocalChain]] run
+    * per (replica, subnet) — is computed in the driver
+    * ([[ResidentChas]]) and comes back as a local frame, the
+    * reference's in-process shape; `0` forces the relational form
+    * below, the at-scale one. */
   def featuresMetadataSubnets(typedEdges: DataFrame, features: DataFrame,
                               nReplicates: Int, seed: Long,
-                              distMatch: Boolean = false): DataFrame = {
+                              distMatch: Boolean = false,
+                              residentMaxEdges: Long = Regime.ResidentMaxEdges)
+      : DataFrame = {
+    require(nReplicates >= 1, s"nReplicates must be >= 1, got $nReplicates")
+    val resident =
+      if (distMatch) None
+      else Regime.collectAtMost(residentMaxEdges,
+          typedEdges.select("src", "dst", "type"),
+          features.select("fragment", "feature", "value"))
+        .map(in => ResidentChas.featuresMetadataRows(
+          ResidentChas.subnetStats(in(0), in(1), nReplicates, seed,
+            DefaultRounds)))
+    resident match {
+      case Some(rows) => typedEdges.sparkSession.createDataFrame(rows,
+        ResidentChas.FeaturesMetadataSchema)
+      case None => featuresMetadataRel(typedEdges, features, nReplicates,
+        seed, distMatch)
+    }
+  }
+
+  private def featuresMetadataRel(typedEdges: DataFrame, features: DataFrame,
+                                  nReplicates: Int, seed: Long,
+                                  distMatch: Boolean): DataFrame = {
     val tagged = typedEdges.select(col("src"), col("dst"),
       explode(array(lit("net"),
         when(col("type") === "P-P", lit("pp")).otherwise(lit("po"))))

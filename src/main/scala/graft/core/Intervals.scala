@@ -53,7 +53,7 @@ object Intervals {
                   rightPrefix: String = "r_",
                   joinType: String = "inner",
                   bucketWidth: Long = DefaultBucketWidth): DataFrame = {
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val rightRenamed = right.columns.foldLeft(right)((d, c) =>
       d.withColumnRenamed(c, rightPrefix + c))
     val lb = bucketed(left, bucketWidth)
@@ -137,7 +137,7 @@ object Intervals {
       col(rightPrefix + "start") - col("end"),
       col("start") - col(rightPrefix + "end"),
       lit(0L))
-    val leftCols = left.columns
+    val leftCols = left.columns.toSeq
     val candidates = lb.join(rb,
         lb("chr") === rb(rightPrefix + "chr") &&
         lb("__bucket") === rb("__rbucket"))

@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** Scale-aware regime dispatch (r13 verdict #2).
   *
@@ -26,6 +28,20 @@ import org.apache.spark.sql.DataFrame
   *                                  plans are `LocalRelation`s (a
   *                                  resident search's subnet) lay out in
   *                                  the driver, within `localMaxRows`
+  *   - a15       Chas.aggregateOntoFragments  `residentMaxEdges`
+  *                                  (fragment rows and interval rows,
+  *                                  each): at or below it the overlap
+  *                                  aggregation runs in the driver
+  *                                  ([[ResidentChas]]); above it the
+  *                                  bucketed overlap join
+  *   - a17       Chas.featuresMetadataSubnets  `residentMaxEdges`
+  *                                  (edge rows and feature rows, each;
+  *                                  no distance match): at or below it
+  *                                  the per-subnet statistics and the
+  *                                  random envelope run in the driver;
+  *                                  above it the relational plans (whose
+  *                                  swap chain routes on
+  *                                  `localMaxChainRows`)
   *
   * Routing picks a regime and nothing else: no branch writes session
   * conf (shuffle width, AQE), so every regime runs at the session's
@@ -43,15 +59,70 @@ import org.apache.spark.sql.DataFrame
   */
 object Regime {
 
-  /** Snapshot edge rows at or below which [[Serving.open]] also keeps a
-    * driver-resident copy and answers requests with no Spark job: ~3x
+  /** The most rows of any one input the driver collects to answer in
+    * place of a relational plan. [[Serving.open]] keeps a
+    * driver-resident copy of a snapshot with at most this many edges
+    * and answers requests with no Spark job;
+    * [[Chas.aggregateOntoFragments]] and
+    * [[Chas.featuresMetadataSubnets]] compute in the driver when each
+    * of their inputs has at most this many rows. The value is ~3x
     * the reference's largest dataset (Human Monocyte, 171k edges / 96k
-    * nodes; BASELINE.md). The copy measured 10.6 MB (Spark's
+    * nodes; BASELINE.md). The serving copy measured 10.6 MB (Spark's
     * SizeEstimator) for 15.5k edges / 9.9k nodes, so the cutoff bounds
     * it near 350 MB of driver heap at that node/edge ratio. Above it the
     * pinned frames serve (relational joins), and the
-    * chromosome-partitioned snapshot is the at-scale form. */
+    * chromosome-partitioned snapshot is the at-scale form; the Chas
+    * layers take their relational plans. */
   val ResidentMaxEdges = 500000L
+
+  /** The rows of every frame in `dfs` when each has at most `maxRows`
+    * of them, else None (`maxRows <= 0` is always None: the relational
+    * route). The row check is the fetch. A local frame (its optimized
+    * plan a `LocalRelation`) is counted and read with no job; all the
+    * others are read together in ONE job of one task, which stops as
+    * soon as any of them passes `maxRows` — so a pinned or checkpointed
+    * input is read where its blocks sit, each frame is planned once,
+    * and the driver never holds more than `maxRows + 1` rows of a frame
+    * that turns out too large. */
+  def collectAtMost(maxRows: Long, dfs: DataFrame*): Option[Seq[Array[Row]]] =
+    if (maxRows <= 0L) None
+    else {
+      val local = dfs.map(_.queryExecution.optimizedPlan match {
+        case l: LocalRelation => Some(l.data.length)
+        case _ => None
+      })
+      val remote = dfs.indices.filter(local(_).isEmpty)
+      if (local.exists(_.exists(_ > maxRows))) None
+      else {
+        val fetched: Array[(Int, InternalRow)] =
+          if (remote.isEmpty) Array.empty
+          else {
+            val k = dfs.length
+            dfs.head.sparkSession.sparkContext
+              .union(remote.map { i =>
+                dfs(i).queryExecution.toRdd.mapPartitions(
+                  _.map(r => (i, r.copy())))
+              })
+              .coalesce(1)
+              .mapPartitions { it =>
+                val seen = new Array[Long](k)
+                it.takeWhile { t => seen(t._1) += 1; seen(t._1) <= maxRows + 1 }
+              }
+              .collect()
+          }
+        val byInput = fetched.groupBy(_._1)
+        if (byInput.exists(_._2.length > maxRows)) None
+        else Some(dfs.indices.map { i =>
+          if (local(i).isDefined) dfs(i).collect()
+          else {
+            val toRow =
+              CatalystTypeConverters.createToScalaConverter(dfs(i).schema)
+            byInput.getOrElse(i, Array.empty[(Int, InternalRow)])
+              .map(t => toRow(t._2).asInstanceOf[Row])
+          }
+        })
+      }
+    }
 
   /** Catalyst's estimated size of the frame in bytes — read from the
     * optimized logical plan's statistics; never launches a job. */

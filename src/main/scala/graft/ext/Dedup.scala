@@ -467,7 +467,7 @@ object Dedup {
     val losers = dedupClusters(docs, idCol, textCol, threshold)
       .filter(!col("is_canonical"))
       .select(col("doc_id").as(idCol))
-    val keep = docs.columns.filter(c => c != textCol).map(col)
+    val keep = docs.columns.toSeq.filter(c => c != textCol).map(col)
     docs.join(losers, Seq(idCol), "left_anti")
       .select(keep :+ md5(col(textCol)).as("text_md5"): _*)
   }
@@ -505,7 +505,7 @@ object Dedup {
       .select(col("id"))
       .unionAll(cc.join(stComps, Seq("comp"), "left_anti")
         .filter(col("id") =!= col("comp")).select(col("id")))
-    val keep = batch.columns.filter(_ != textCol).map(col)
+    val keep = batch.columns.toSeq.filter(_ != textCol).map(col)
     batch.join(losers, key(col(idCol)) === col("id"), "left_anti")
       .select(keep :+ md5(col(textCol)).as("text_md5"): _*)
   }

@@ -21,4 +21,20 @@ object Num {
     (when(c >= 0, floor(c * p + lit(0.5)))
       .otherwise(-floor(-c * p + lit(0.5)))) / p
   }
+
+  /** The column form above on one driver-side value, step for step:
+    * Spark's `floor` of a double yields a long (a JVM `(long)` cast,
+    * so NaN floors to 0), SQL orders NaN above every number (so
+    * `NaN >= 0` holds), and the long divides back as a double. Null
+    * stays null. */
+  def roundLike(x: java.lang.Double, scale: Int): java.lang.Double =
+    if (x == null) null
+    else {
+      val p = math.pow(10, scale)
+      val v = x.doubleValue
+      val f =
+        if (v >= 0 || v.isNaN) math.floor(v * p + 0.5).toLong
+        else -math.floor(-v * p + 0.5).toLong
+      f / p
+    }
 }

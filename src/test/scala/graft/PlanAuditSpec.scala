@@ -105,14 +105,10 @@ class PlanAuditSpec extends SparkSpec {
       "bounded insert batch × full-corpus brute-force truth + the two 1-row before/after aggregates crossed (Similarity.knnGraphRefineRecall); insert and refine are all equi-joins",
     "t14_embed_knn" ->
       "bounded 5-probe set × hashed-embedding corpus brute-force scan (Similarity.bruteForceTopK over TextOps.hashEmbed)",
-    "a15_feature_agg_mean" ->
-      "fragment frame × broadcast feature-name list (a handful of column names; Chas.scala:159)",
-    "a15_feature_agg_min" ->
-      "fragment frame × broadcast feature-name list (Chas.scala:159)",
-    "a15_feature_agg_max" ->
-      "fragment frame × broadcast feature-name list (Chas.scala:159)",
-    "a15_feature_agg_proportion" ->
-      "fragment frame × broadcast feature-name list (Chas.scala:159)",
+    // the other a15 lanes take the driver route at test scale: their
+    // plans are local relations, with no join at all
+    "a15_feature_agg_proportion_dist" ->
+      "fragment frame × broadcast feature-name list (a handful of column names; Chas.aggregateRel's missing fill)",
     "a5_graph_metadata" ->
       "1-row node count × 1-row edge summary (GraphOps.scala:681)",
     "t5_tfidf" ->
