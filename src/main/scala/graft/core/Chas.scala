@@ -110,6 +110,15 @@ object Chas {
       .groupBy(col("feature"))
       .agg(avg(col("degree")).as("mean_degree"))
 
+  /** The most rows of either input [[aggregateOntoFragments]] fetches
+    * to aggregate in the driver. The driver sweep's cost grows with the
+    * rows while the bucketed join's is mostly fixed; with sf0.1's 19.2k
+    * fragments (4-core host, warm session, medians of 5) the sweep
+    * wins at 100k intervals (515 vs 994 ms), ties near 200k (649 vs
+    * 695 ms) and loses past it (968 vs 753 ms at 301k, 1,075 vs
+    * 856 ms at 492k). */
+  val ResidentAggregateMaxRows = 200000L
+
   /** A15 feature aggregation onto fragments: interval-join feature
     * intervals with fragments, aggregate per (fragment, feature) with
     * auxfun ∈ {mean, min, max}; uncovered fragments get missingv (0).
@@ -122,8 +131,9 @@ object Chas {
     * auxfun is an enum-dispatched builtin — the reference's string-eval
     * of a function name is a security bug not reproduced (SURVEY §2.8).
     *
-    * When both inputs have at most `residentMaxEdges` rows (the upload's
-    * shape: a dataset's fragments and one feature file), the aggregation
+    * When both inputs have at most `residentMaxEdges` rows (default
+    * [[ResidentAggregateMaxRows]]; the upload's shape: a dataset's
+    * fragments and one feature file), the aggregation
     * runs in the driver ([[ResidentChas.aggregate]]: a sorted sweep per
     * chromosome) and comes back as a local frame; `0` forces the
     * relational form below, the at-scale one.
@@ -133,7 +143,7 @@ object Chas {
                              missingValue: Double = 0.0,
                              proportion: Boolean = false,
                              bucketWidth: Long = Intervals.DefaultBucketWidth,
-                             residentMaxEdges: Long = Regime.ResidentMaxEdges)
+                             residentMaxEdges: Long = ResidentAggregateMaxRows)
       : DataFrame = {
     if (!proportion && !Set("mean", "min", "max")(auxfun))
       throw new IllegalArgumentException(

@@ -237,9 +237,14 @@ object Pipeline {
         MetadataJson.stringArrayJson(ds.suggestions) })
       val fChrs = Future(timed("chromosomes") {
         ds.chromosomes.collect().map(_.getString(0)).toSeq })
+      // the edge count is at hand: an edge set over the driver cutoff
+      // takes the relational statistics without a fetch attempt
       val fFeat = features.map(f => Future(timed("featuresMetadata") {
         MetadataJson.featuresMetadataJson(
-          Chas.featuresMetadataSubnets(edgesC, f, nReplicates, seed)) }))
+          Chas.featuresMetadataSubnets(edgesC, f, nReplicates, seed,
+            residentMaxEdges =
+              if (nEdges > Regime.ResidentMaxEdges) 0L
+              else Regime.ResidentMaxEdges)) }))
       // documents wait only on the chromosome list, not the other lanes
       val fDocs = fChrs.map { all =>
         timed("chromosomeDocs") {

@@ -1,8 +1,11 @@
 package graft.core
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.unsafe.Platform
 
 /** Scale-aware regime dispatch (r13 verdict #2).
   *
@@ -30,7 +33,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
   *                                  the driver, within `localMaxRows`
   *   - a15       Chas.aggregateOntoFragments  `residentMaxEdges`
   *                                  (fragment rows and interval rows,
-  *                                  each): at or below it the overlap
+  *                                  each; default
+  *                                  `Chas.ResidentAggregateMaxRows`,
+  *                                  the measured crossover): at or
+  *                                  below it the overlap
   *                                  aggregation runs in the driver
   *                                  ([[ResidentChas]]); above it the
   *                                  bucketed overlap join
@@ -63,11 +69,13 @@ object Regime {
     * place of a relational plan. [[Serving.open]] keeps a
     * driver-resident copy of a snapshot with at most this many edges
     * and answers requests with no Spark job;
-    * [[Chas.aggregateOntoFragments]] and
-    * [[Chas.featuresMetadataSubnets]] compute in the driver when each
-    * of their inputs has at most this many rows. The value is ~3x
-    * the reference's largest dataset (Human Monocyte, 171k edges / 96k
-    * nodes; BASELINE.md). The serving copy measured 10.6 MB (Spark's
+    * [[Chas.featuresMetadataSubnets]] computes in the driver when each
+    * of its inputs has at most this many rows (one replicate, 4-core
+    * host, medians of 5: 6.7 s there against 14.4 s over the
+    * relational plans at 490k edges, 3.3 vs 8.4 s at sf0.1's 274k),
+    * and [[Chas.aggregateOntoFragments]] below its own measured
+    * crossover. The value is ~3x the reference's largest dataset (Human
+    * Monocyte, 171k edges / 96k nodes; BASELINE.md). The serving copy measured 10.6 MB (Spark's
     * SizeEstimator) for 15.5k edges / 9.9k nodes, so the cutoff bounds
     * it near 350 MB of driver heap at that node/edge ratio. Above it the
     * pinned frames serve (relational joins), and the
@@ -79,11 +87,14 @@ object Regime {
     * of them, else None (`maxRows <= 0` is always None: the relational
     * route). The row check is the fetch. A local frame (its optimized
     * plan a `LocalRelation`) is counted and read with no job; all the
-    * others are read together in ONE job of one task, which stops as
-    * soon as any of them passes `maxRows` — so a pinned or checkpointed
-    * input is read where its blocks sit, each frame is planned once,
-    * and the driver never holds more than `maxRows + 1` rows of a frame
-    * that turns out too large. */
+    * others are read together in ONE job of one task, which writes
+    * their rows as `UnsafeRow` bytes into one array and decides in
+    * place: once any of them passes `maxRows` (or the array half the
+    * driver's `spark.driver.maxResultSize`) it stops reading and
+    * returns no row, only that verdict. So a pinned or checkpointed input is read where its
+    * blocks sit, each frame is planned once, and an input that turns
+    * out too large costs one partial scan and no transfer to the
+    * driver. */
   def collectAtMost(maxRows: Long, dfs: DataFrame*): Option[Seq[Array[Row]]] =
     if (maxRows <= 0L) None
     else {
@@ -94,33 +105,73 @@ object Regime {
       val remote = dfs.indices.filter(local(_).isEmpty)
       if (local.exists(_.exists(_ > maxRows))) None
       else {
-        val fetched: Array[(Int, InternalRow)] =
-          if (remote.isEmpty) Array.empty
+        // each row written as (input, size, its UnsafeRow bytes)
+        val fetched: Option[Array[Byte]] =
+          if (remote.isEmpty) Some(Array.emptyByteArray)
           else {
             val k = dfs.length
-            dfs.head.sparkSession.sparkContext
+            val sc = dfs.head.sparkSession.sparkContext
+            // past the largest array, or half the driver's result cap,
+            // the rows count as too many
+            val resultCap =
+              sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+            val maxBytes = math.min(Int.MaxValue - 8L,
+              if (resultCap <= 0L) Long.MaxValue else resultCap / 2)
+            sc
               .union(remote.map { i =>
-                dfs(i).queryExecution.toRdd.mapPartitions(
-                  _.map(r => (i, r.copy())))
+                val schema = dfs(i).schema
+                dfs(i).queryExecution.toRdd.mapPartitions { rows =>
+                  val toUnsafe = UnsafeProjection.create(schema)
+                  rows.map(r => (i, toUnsafe(r)))
+                }
               })
               .coalesce(1)
               .mapPartitions { it =>
                 val seen = new Array[Long](k)
-                it.takeWhile { t => seen(t._1) += 1; seen(t._1) <= maxRows + 1 }
+                var buf = new Array[Byte](1 << 16)
+                var pos = 0
+                var over = false
+                while (!over && it.hasNext) {
+                  val (i, row) = it.next()
+                  seen(i) += 1
+                  val size = row.getSizeInBytes
+                  val need = pos + 8L + size
+                  if (seen(i) > maxRows || need > maxBytes) over = true
+                  else {
+                    if (need > buf.length)
+                      buf = java.util.Arrays.copyOf(buf,
+                        math.min(math.max(buf.length * 2L, need), maxBytes)
+                          .toInt)
+                    Platform.putInt(buf, Platform.BYTE_ARRAY_OFFSET + pos, i)
+                    Platform.putInt(buf, Platform.BYTE_ARRAY_OFFSET + pos + 4,
+                      size)
+                    row.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos + 8)
+                    pos += 8 + size
+                  }
+                }
+                Iterator.single(
+                  if (over) None else Some(java.util.Arrays.copyOf(buf, pos)))
               }
-              .collect()
+              .collect().headOption.getOrElse(Some(Array.emptyByteArray))
           }
-        val byInput = fetched.groupBy(_._1)
-        if (byInput.exists(_._2.length > maxRows)) None
-        else Some(dfs.indices.map { i =>
-          if (local(i).isDefined) dfs(i).collect()
-          else {
-            val toRow =
-              CatalystTypeConverters.createToScalaConverter(dfs(i).schema)
-            byInput.getOrElse(i, Array.empty[(Int, InternalRow)])
-              .map(t => toRow(t._2).asInstanceOf[Row])
+        fetched.map { bytes =>
+          val rows = dfs.map(_ => mutable.ArrayBuffer.empty[Row])
+          val toRow = dfs.map(df =>
+            CatalystTypeConverters.createToScalaConverter(df.schema))
+          val row = dfs.map(df => new UnsafeRow(df.schema.length))
+          var pos = 0
+          while (pos < bytes.length) {
+            val i = Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + pos)
+            val size =
+              Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 4)
+            row(i).pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + pos + 8, size)
+            rows(i) += toRow(i)(row(i)).asInstanceOf[Row]
+            pos += 8 + size
           }
-        })
+          dfs.indices.map { i =>
+            if (local(i).isDefined) dfs(i).collect() else rows(i).toArray
+          }
+        }
       }
     }
 

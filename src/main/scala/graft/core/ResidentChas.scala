@@ -11,7 +11,8 @@ import graft.ext.Num
   * the per-subnet statistics and the random envelope in-process over a
   * network already in memory). [[Chas.aggregateOntoFragments]] and
   * [[Chas.featuresMetadataSubnets]] call it when every input has at
-  * most [[Regime.ResidentMaxEdges]] rows, with the inputs collected by
+  * most their cutoff of rows ([[Chas.ResidentAggregateMaxRows]],
+  * [[Regime.ResidentMaxEdges]]), with the inputs collected by
   * [[Regime.collectAtMost]]; the rows it returns become a local frame.
   *
   * EXACTNESS CONTRACT: each function emits the rows of the relational
@@ -38,9 +39,12 @@ import graft.ext.Num
   *  - rounding is [[Num.roundLike]] and the interval string is
   *    `format_string`'s `Locale.US` formatter, so null bounds print
   *    `null`.
-  * Sums run in input order, so a value can differ from a multi-task
-  * plan's in the last bits (partial aggregates merge in task order),
-  * never in a rounded output away from a rounding boundary. */
+  * Sums run in a fixed order: the statistics' in input order, an
+  * aggregation mean's in descending interval start per fragment (the
+  * sweep walks back from the last start <= the fragment's end). So a
+  * value can differ from a multi-task plan's in the last bits (partial
+  * aggregates merge in task order), never in a rounded output away
+  * from a rounding boundary. */
 private[graft] object ResidentChas {
 
   val AggregateSchema: StructType = StructType(Seq(
@@ -118,64 +122,91 @@ private[graft] object ResidentChas {
   def aggregate(frags: Array[Row], ivs: Array[Row], auxfun: String,
                 missingValue: Double, proportion: Boolean)
       : java.util.List[Row] = {
+    // interval features interned, in first-seen order; a null feature
+    // is emitted but never matches
+    val features = ivs.map(r => if (r.isNullAt(3)) null else r.getString(3))
+      .distinct
+    val featureIdx = features.zipWithIndex.filter(_._1 != null).toMap
+    val nF = features.length
     // per chromosome: the live intervals sorted by start, with the
     // running max of end — a fragment's overlaps lie at or before the
     // last start <= its end, back to where the running max falls short
     // of its start
-    final class Chrom(val at: Array[Int]) {
-      val start: Array[Long] = at.map(i => long(ivs(i), 1))
-      val end: Array[Long] = at.map(i => long(ivs(i), 2))
+    val live = ivs.indices.filter(i => !ivs(i).isNullAt(0) &&
+      !ivs(i).isNullAt(1) && !ivs(i).isNullAt(2))
+    val ivStart = new Array[Long](ivs.length)
+    for (i <- live) ivStart(i) = long(ivs(i), 1)
+    final class Chrom(at: Array[Int]) {
+      val start = new Array[Long](at.length)
+      val end = new Array[Long](at.length)
+      val feature = new Array[Int](at.length)
+      val value = new Array[java.lang.Double](at.length)
+      for (j <- at.indices) {
+        val r = ivs(at(j))
+        start(j) = ivStart(at(j)); end(j) = long(r, 2)
+        feature(j) = if (r.isNullAt(3)) -1 else featureIdx(r.getString(3))
+        value(j) = num(r, 4)
+      }
       val maxEnd: Array[Long] =
         end.scanLeft(Long.MinValue)((a, b) => math.max(a, b)).tail
     }
-    val byChr: Map[String, Chrom] = ivs.indices
-      .filter(i => !ivs(i).isNullAt(0) && !ivs(i).isNullAt(1) &&
-        !ivs(i).isNullAt(2))
-      .groupBy(ivs(_).getString(0))
-      .map { case (c, is) =>
-        c -> new Chrom(is.sortBy(i => long(ivs(i), 1)).toArray)
-      }
+    val byChr: Map[String, Chrom] = live.groupBy(ivs(_).getString(0))
+      .map { case (c, is) => c -> new Chrom(is.toArray.sortBy(ivStart(_))) }
 
-    // per (fragment id, feature): the statistic over its overlaps
-    val mean = mutable.HashMap.empty[(String, String), Mean]
-    val ext = mutable.HashMap.empty[(String, String), Extreme]
-    val covered = mutable.HashMap.empty[(String, String), Covered]
-    for (fr <- frags if !fr.isNullAt(0) && !fr.isNullAt(1) &&
-           !fr.isNullAt(2) && !fr.isNullAt(3);
-         ch <- byChr.get(fr.getString(1))) {
-      val (id, fs, fe) = (fr.getString(0), long(fr, 2), long(fr, 3))
-      var k = java.util.Arrays.binarySearch(ch.start, fe)
-      // the last index whose start <= fe
-      if (k < 0) k = -k - 2
-      else while (k + 1 < ch.start.length && ch.start(k + 1) == fe) k += 1
-      while (k >= 0 && ch.maxEnd(k) >= fs) {
-        val iv = ivs(ch.at(k))
-        if (ch.end(k) >= fs && !iv.isNullAt(3)) {
-          val key = (id, iv.getString(3))
-          if (proportion)
-            covered.getOrElseUpdate(key, new Covered).add(
-              math.max(fs, ch.start(k)), math.min(fe, ch.end(k)), fe - fs + 1)
-          else if (auxfun == "mean")
-            mean.getOrElseUpdate(key, new Mean).add(num(iv, 4))
-          else
-            ext.getOrElseUpdate(key, new Extreme(auxfun == "max"))
-              .add(num(iv, 4))
+    // the relational route groups overlaps by fragment id: every row of
+    // one id shares the statistic over all of its rows' overlaps
+    val rowsOf = new java.util.HashMap[String, mutable.ArrayBuffer[Row]]()
+    for (fr <- frags if !fr.isNullAt(0))
+      rowsOf.computeIfAbsent(fr.getString(0),
+        _ => mutable.ArrayBuffer.empty[Row]) += fr
+    // per fragment id: the statistic of each feature, by feature index
+    val valueOf = new java.util.HashMap[String, Array[java.lang.Double]]()
+    rowsOf.forEach { (id, rows) =>
+      val mean = new Array[Mean](nF)
+      val ext = new Array[Extreme](nF)
+      val covered = new Array[Covered](nF)
+      for (fr <- rows if !fr.isNullAt(1) && !fr.isNullAt(2) &&
+             !fr.isNullAt(3);
+           ch <- byChr.get(fr.getString(1))) {
+        val (fs, fe) = (long(fr, 2), long(fr, 3))
+        var k = java.util.Arrays.binarySearch(ch.start, fe)
+        // the last index whose start <= fe
+        if (k < 0) k = -k - 2
+        else while (k + 1 < ch.start.length && ch.start(k + 1) == fe) k += 1
+        while (k >= 0 && ch.maxEnd(k) >= fs) {
+          val f = ch.feature(k)
+          if (ch.end(k) >= fs && f >= 0) {
+            if (proportion) {
+              if (covered(f) == null) covered(f) = new Covered
+              covered(f).add(math.max(fs, ch.start(k)),
+                math.min(fe, ch.end(k)), fe - fs + 1)
+            } else if (auxfun == "mean") {
+              if (mean(f) == null) mean(f) = new Mean
+              mean(f).add(ch.value(k))
+            } else {
+              if (ext(f) == null) ext(f) = new Extreme(auxfun == "max")
+              ext(f).add(ch.value(k))
+            }
+          }
+          k -= 1
         }
-        k -= 1
       }
+      valueOf.put(id, Array.tabulate(nF) { f =>
+        if (proportion) Option(covered(f)).map(_.value).orNull
+        else if (auxfun == "mean") Option(mean(f)).map(_.value).orNull
+        else Option(ext(f)).map(_.value).orNull
+      })
     }
-    def value(key: (String, String)): java.lang.Double =
-      if (proportion) covered.get(key).map(_.value).orNull
-      else if (auxfun == "mean") mean.get(key).map(_.value).orNull
-      else ext.get(key).map(_.value).orNull
 
-    val features = ivs.map(r => if (r.isNullAt(3)) null else r.getString(3))
-      .distinct
-    val out = new java.util.ArrayList[Row](frags.length * features.length)
-    for (fr <- frags; f <- features) {
+    val out = new java.util.ArrayList[Row](frags.length * nF)
+    for (fr <- frags) {
       val id = if (fr.isNullAt(0)) null else fr.getString(0)
-      val v = if (id == null || f == null) null else value((id, f))
-      out.add(Row(id, f, if (v == null) missingValue else v.doubleValue))
+      val vs = if (id == null) null else valueOf.get(id)
+      for (f <- 0 until nF) {
+        val v = if (vs == null) null else vs(f)
+        out.add(Row(id, features(f),
+          if (v == null) missingValue else v.doubleValue))
+      }
     }
     out
   }

@@ -6,6 +6,10 @@ import graft.core.{Chas, GraphOps}
 /** A11-A16 chaser statistics + G6 randomization properties. */
 class ChasSpec extends SparkSpec {
 
+  /** `residentMaxEdges` of each aggregation route: 0 the relational
+    * plans, the default the driver kernel. */
+  private val Routes = Seq(0L, Chas.ResidentAggregateMaxRows)
+
   test("A11 ChAs: hand-computed edge-end correlation") {
     // path a-b-c with f(a)=1, f(b)=0, f(c)=1: symmetrized endpoint
     // samples x=[1,0,0,1], y=[0,1,1,0] -> Pearson r = -1
@@ -41,16 +45,20 @@ class ChasSpec extends SparkSpec {
       .toDF("chr", "start", "end", "feature", "value")
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    // small bucket width so intervals straddle buckets (dedup predicate)
-    val mean = asMap(Chas.aggregateOntoFragments(fragments, intervals,
-      "mean", bucketWidth = 100L))
-    assert(mean == Map("a" -> 2.0, "b" -> 3.0, "c" -> 0.0))
-    val max = asMap(Chas.aggregateOntoFragments(fragments, intervals,
-      "max", bucketWidth = 100L))
-    assert(max == Map("a" -> 2.0, "b" -> 4.0, "c" -> 0.0))
-    val prop = asMap(Chas.aggregateOntoFragments(fragments, intervals,
-      proportion = true, bucketWidth = 100L))
-    assert(prop == Map("a" -> 0.5, "b" -> 0.71, "c" -> 0.0))
+    // small bucket width so intervals straddle buckets (dedup
+    // predicate); both routes — residentMaxEdges = 0 is the relational
+    // bucketed join, the default the driver sweep
+    for (cut <- Routes) {
+      val mean = asMap(Chas.aggregateOntoFragments(fragments, intervals,
+        "mean", bucketWidth = 100L, residentMaxEdges = cut))
+      assert(mean == Map("a" -> 2.0, "b" -> 3.0, "c" -> 0.0), s"cut $cut")
+      val max = asMap(Chas.aggregateOntoFragments(fragments, intervals,
+        "max", bucketWidth = 100L, residentMaxEdges = cut))
+      assert(max == Map("a" -> 2.0, "b" -> 4.0, "c" -> 0.0), s"cut $cut")
+      val prop = asMap(Chas.aggregateOntoFragments(fragments, intervals,
+        proportion = true, bucketWidth = 100L, residentMaxEdges = cut))
+      assert(prop == Map("a" -> 0.5, "b" -> 0.71, "c" -> 0.0), s"cut $cut")
+    }
   }
 
   test("A15 proportion is COVERED proportion: overlapping peaks <= 1.0") {
@@ -64,17 +72,19 @@ class ChasSpec extends SparkSpec {
       ("1", 120L, 179L, "f1", 1.0),
       ("1", 130L, 149L, "f1", 1.0))
       .toDF("chr", "start", "end", "feature", "value")
-    val prop = Chas.aggregateOntoFragments(fragments, intervals,
-      proportion = true, bucketWidth = 100L)
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(prop == Map("a" -> 0.7))
     // disjoint-but-adjacent segments still sum exactly
     val adj = Seq(("1", 100L, 149L, "f1", 1.0), ("1", 150L, 199L, "f1", 1.0))
       .toDF("chr", "start", "end", "feature", "value")
-    val full = Chas.aggregateOntoFragments(fragments, adj,
-      proportion = true, bucketWidth = 100L)
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(full == Map("a" -> 1.0))
+    for (cut <- Routes) {
+      val prop = Chas.aggregateOntoFragments(fragments, intervals,
+        proportion = true, bucketWidth = 100L, residentMaxEdges = cut)
+        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      assert(prop == Map("a" -> 0.7), s"cut $cut")
+      val full = Chas.aggregateOntoFragments(fragments, adj,
+        proportion = true, bucketWidth = 100L, residentMaxEdges = cut)
+        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+      assert(full == Map("a" -> 1.0), s"cut $cut")
+    }
   }
 
   test("A16 binarize maps positives to 1.0, rest to 0.0") {

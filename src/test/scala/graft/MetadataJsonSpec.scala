@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.{Annotate, Chas, GraphOps}
+import graft.core.{Annotate, Chas, GraphOps, Regime}
 import graft.io.MetadataJson
 
 /** S11 JSON assembly + the one-pass three-subnet features_metadata +
   * mouse-organism J4 variants. */
 class MetadataJsonSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `residentMaxEdges` of each route: 0 the relational plans, the
+    * default the driver kernel. */
+  private val Routes = Seq(0L, Regime.ResidentMaxEdges)
 
   private def typedEdges = Seq(
     ("p1", "p2", "P-P"), ("p1", "o1", "P-O"), ("p2", "o2", "P-O"))
@@ -17,18 +21,20 @@ class MetadataJsonSpec extends SparkSpec {
     ("p1", "f", 1.0), ("p2", "f", 1.0), ("o1", "f", 0.0), ("o2", "f", 1.0)))
 
   test("featuresMetadataSubnets emits net/pp/po rows in one pass") {
-    val out = Chas.featuresMetadataSubnets(typedEdges, feats,
-      nReplicates = 2, seed = 1L).collect()
-    val subnets = out.map(_.getString(0)).toSet
-    assert(subnets == Set("net", "pp", "po"))
-    val byNet = out.map(r => r.getString(0) -> r).toMap
-    // pp subnet = p1-p2 only; both value 1.0 -> abundance 1.0
-    assert(byNet("pp").getDouble(2) == 1.0)
-    // net abundance over all 4 nodes = 0.75
-    assert(byNet("net").getDouble(2) == 0.75)
-    // envelope string "min,max"
-    assert(byNet("net").getString(4).matches("-?\\d+\\.\\d{3},-?\\d+\\.\\d{3}")
-      || byNet("net").getString(4) == null)
+    for (cut <- Routes) {
+      val out = Chas.featuresMetadataSubnets(typedEdges, feats,
+        nReplicates = 2, seed = 1L, residentMaxEdges = cut).collect()
+      val subnets = out.map(_.getString(0)).toSet
+      assert(subnets == Set("net", "pp", "po"), s"cut $cut")
+      val byNet = out.map(r => r.getString(0) -> r).toMap
+      // pp subnet = p1-p2 only; both value 1.0 -> abundance 1.0
+      assert(byNet("pp").getDouble(2) == 1.0, s"cut $cut")
+      // net abundance over all 4 nodes = 0.75
+      assert(byNet("net").getDouble(2) == 0.75, s"cut $cut")
+      // envelope string "min,max"
+      assert(byNet("net").getString(4).matches("-?\\d+\\.\\d{3},-?\\d+\\.\\d{3}")
+        || byNet("net").getString(4) == null, s"cut $cut")
+    }
   }
 
   test("metadata.json carries the reference field set") {
@@ -52,12 +58,15 @@ class MetadataJsonSpec extends SparkSpec {
   }
 
   test("features_metadata.json groups feature -> subnet -> stats") {
-    val stats = Chas.featuresMetadataSubnets(typedEdges, feats, 1, 1L)
-    val j = MetadataJson.featuresMetadataJson(stats)
-    assert(j.startsWith("{\"f\":{"))
-    assert(j.contains("\"net\":{\"Abundance\":"))
-    assert(j.contains("\"Random ChAs interval\":"))
-    assert(j.contains("\"Mean degree\":"))
+    for (cut <- Routes) {
+      val stats = Chas.featuresMetadataSubnets(typedEdges, feats, 1, 1L,
+        residentMaxEdges = cut)
+      val j = MetadataJson.featuresMetadataJson(stats)
+      assert(j.startsWith("{\"f\":{"), s"cut $cut")
+      assert(j.contains("\"net\":{\"Abundance\":"), s"cut $cut")
+      assert(j.contains("\"Random ChAs interval\":"), s"cut $cut")
+      assert(j.contains("\"Mean degree\":"), s"cut $cut")
+    }
   }
 
   test("distributed features sink writes one JSON line per fragment") {

@@ -61,14 +61,18 @@ class PropertiesSpec extends SparkSpec {
       val intervals = segs
         .map { case (s, e) => ("1", s, e, "ft", 1.0) }
         .toDF("chr", "start", "end", "feature", "value")
-      val got = Chas.aggregateOntoFragments(fragments, intervals,
-          proportion = true, bucketWidth = 500L)
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
       val covered = segs.flatMap { case (s, e) =>
         (math.max(s, 0L) to math.min(e, 999L)) }.distinct.size
-      assert(math.abs(got("f") - covered / 1000.0) < 1e-9,
-        s"iteration $it: got ${got("f")}, brute ${covered / 1000.0}")
-      assert(got("f") <= 1.0 + 1e-9)
+      // both routes: the relational bucketed join and window merge
+      // (residentMaxEdges = 0), the driver sweep (the default)
+      for (cut <- Seq(0L, Chas.ResidentAggregateMaxRows)) {
+        val got = Chas.aggregateOntoFragments(fragments, intervals,
+            proportion = true, bucketWidth = 500L, residentMaxEdges = cut)
+          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+        assert(math.abs(got("f") - covered / 1000.0) < 1e-9,
+          s"iteration $it, cut $cut: got ${got("f")}, brute ${covered / 1000.0}")
+        assert(got("f") <= 1.0 + 1e-9)
+      }
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
-import graft.core.{Chas, ResidentChas}
+import graft.core.{Chas, Regime, ResidentChas}
 import graft.io.MetadataJson
 
 /** Driver-resident ChAs layers: at or below the cutoff,
@@ -175,5 +175,30 @@ class ResidentChasSpec extends SparkSpec {
       agg("mean", proportion = false, 0L).collect()
     }
     assert(relJobs > 0)
+  }
+
+  test("collectAtMost over planned frames: one job, no rows past the cutoff") {
+    val remote = spark.range(0L, 10L, 1L, 3).toDF("id")
+    val local = Seq(1L, 2L).toDF("id")
+    val (got, jobs) = JobCount.of(spark.sparkContext) {
+      Regime.collectAtMost(10L, remote, local)
+    }
+    assert(jobs == 1)
+    assert(got.map(_.map(_.map(_.getLong(0)).toSeq.sorted)) ==
+      Some(Seq((0L until 10L).toSeq, Seq(1L, 2L))))
+    val (over, overJobs) = JobCount.of(spark.sparkContext) {
+      Regime.collectAtMost(9L, remote, local)
+    }
+    assert(over.isEmpty && overJobs == 1)
+    // an oversized local frame decides with no job at all
+    val (overLocal, localJobs) = JobCount.of(spark.sparkContext) {
+      Regime.collectAtMost(1L, remote, local)
+    }
+    assert(overLocal.isEmpty && localJobs == 0)
+    // the statistics over a planned (non-local) edge frame: the fetch
+    // job, then the driver kernel, with the relational rows
+    val planned = typedEdges.repartition(2)
+    val n = rowCount(planned, feats)
+    assert(rowsOf(stats(planned, n)) == rowsOf(stats(planned, n - 1)))
   }
 }
