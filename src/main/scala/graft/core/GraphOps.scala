@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
   * (nodes DF keyed `fragment`/`id`, edges DF keyed `src`,`dst`) —
   * SURVEY.md §2.5. The graph is undirected: algorithms process both
   * edge directions; storage keeps one row per undirected edge
-  * (normalized via Interactions.simplify).
+  * (normalized via Interactions.simplifyBy).
   *
   * Iterative algorithms (CC, diameter) split by regime: a graph whose
   * symmetrized edge list fits one task (≤ [[LocalMaxEdges]] rows) runs

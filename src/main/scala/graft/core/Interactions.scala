@@ -125,19 +125,12 @@ object Interactions {
   }
 
   /** G2 simplify: drop self-loops + duplicate undirected edges, keeping
-    * the FIRST edge's attributes in input order (igraph
+    * per unordered (least, greatest) endpoint pair the FIRST edge in the
+    * caller-supplied total order `orderCols` (igraph
     * edge.attr.comb="first"; reference network_generator.R:146-148).
-    *
-    * Undirected normalization: (least, greatest) of the endpoint ids.
-    * First-wins needs a stable ordinal — we use monotonically_increasing_id
-    * over the input order (valid per-partition ordering is enough for
-    * "first in file order" only if the input order is preserved; for exact
-    * reference parity the caller sorts by an explicit ordinal column).
-    */
-  /** simplify with an explicit, caller-supplied total order for
-    * "first" — deterministic under any partitioning (use this whenever
-    * an ordinal column exists; plain `simplify` falls back to input
-    * order which is only stable for single-file local reads). */
+    * The reference's "first" is file order, which a shuffle cannot
+    * honor; an explicit total order is deterministic under any
+    * partitioning. */
   def simplifyBy(edgesDf: DataFrame, orderCols: Seq[Column]): DataFrame = {
     val w = Window
       .partitionBy(least(col("src"), col("dst")),
@@ -148,19 +141,6 @@ object Interactions {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  def simplify(edgesDf: DataFrame): DataFrame = {
-    val withKey = edgesDf
-      .filter(col("src") =!= col("dst"))
-      .withColumn("u", least(col("src"), col("dst")))
-      .withColumn("v", greatest(col("src"), col("dst")))
-      .withColumn("__ord", monotonically_increasing_id())
-    val w = Window.partitionBy(col("u"), col("v")).orderBy(col("__ord"))
-    withKey
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("u", "v", "__ord", "__rn")
   }
 
   /** J9 bait classification: an edge is P-P iff its oe endpoint is also

@@ -157,6 +157,27 @@ private[graft] object LocalChain {
     if (a <= b) (a.toLong << 32) | (b.toLong & 0xffffffffL)
     else (b.toLong << 32) | (a.toLong & 0xffffffffL)
 
+  /** Occurrence counts keyed by non-negative longs (packed id pairs),
+    * open addressing with linear probing under `fmix64`:
+    * `Long.hashCode` of a packed pair is `a ^ b`, so boxed hash maps
+    * pile node pairs into a few treeified buckets. At most `capacity`
+    * distinct keys; the table stays at most half full. */
+  private final class LongCounts(capacity: Int) {
+    private val mask = Integer.highestOneBit(math.max(2, capacity) * 2 - 1) * 2 - 1
+    private val keys = Array.fill(mask + 1)(-1L)
+    private val counts = new Array[Int](mask + 1)
+    private def slot(k: Long): Int = {
+      var h = k
+      h = (h ^ (h >>> 33)) * 0xff51afd7ed558ccdL
+      h = (h ^ (h >>> 33)) * 0xc4ceb9fe1a85ec53L
+      var i = (h ^ (h >>> 33)).toInt & mask
+      while (keys(i) != -1L && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+    def add(k: Long): Unit = { val i = slot(k); keys(i) = k; counts(i) += 1 }
+    def count(k: Long): Int = { val i = slot(k); if (keys(i) == k) counts(i) else 0 }
+  }
+
   private def round(st: State, src: Array[Int], dst: Array[Int],
                     bin: Array[Int], replica: Int, seed: Long, r: Int)
       : (Array[Int], Array[Int], Array[Int]) = {
@@ -248,15 +269,15 @@ private[graft] object LocalChain {
       }
       k += 1
     }
-    // 3. fused key audit, scoped per group: minted keys vs current
-    // edges of the SAME group + same-group double-mints. Keys are
-    // packed unordered id pairs (equality-only).
-    val existing = new Array[java.util.HashSet[java.lang.Long]](st.nGrps)
-    var gi = 0
-    while (gi < st.nGrps) {
-      existing(gi) = new java.util.HashSet[java.lang.Long]()
-      gi += 1
-    }
+    // 3. fused key audit, scoped per group: a pre-valid pair is
+    // rejected when either key it mints is a current edge of its group
+    // or is minted more than once in that group this round. Keys are
+    // packed unordered id pairs (equality-only), counted in primitive
+    // tables sized up front.
+    val edgesIn = new Array[Int](st.nGrps)
+    i = 0
+    while (i < nE) { edgesIn(st.grpOfBin(bin(i))) += 1; i += 1 }
+    val existing = Array.tabulate(st.nGrps)(g => new LongCounts(edgesIn(g)))
     i = 0
     while (i < nE) {
       existing(st.grpOfBin(bin(i))).add(pairKey(src(i), dst(i)))
@@ -265,48 +286,31 @@ private[graft] object LocalChain {
     @inline def pre(q: Int): Boolean =
       pRs(q) >= 0 && pLs(q) != pRd(q) && pRs(q) != pLd(q) &&
         pairKey(pLs(q), pRd(q)) != pairKey(pRs(q), pLd(q))
-    // minted key -> minter pair indexes; mint count = list size
-    val minted = new Array[java.util.HashMap[java.lang.Long,
-      java.util.ArrayList[Integer]]](st.nGrps)
-    gi = 0
-    while (gi < st.nGrps) {
-      minted(gi) = new java.util.HashMap[java.lang.Long,
-        java.util.ArrayList[Integer]]()
-      gi += 1
-    }
+    val mintsIn = new Array[Int](st.nGrps)
     var q = 0
     while (q < nPairs) {
+      if (pre(q)) mintsIn(st.grpOfBin(pBin(q))) += 2
+      q += 1
+    }
+    val minted = Array.tabulate(st.nGrps)(g => new LongCounts(mintsIn(g)))
+    q = 0
+    while (q < nPairs) {
       if (pre(q)) {
-        val g = st.grpOfBin(pBin(q))
-        val k1 = pairKey(pLs(q), pRd(q))
-        val k2 = pairKey(pRs(q), pLd(q))
-        var l = minted(g).get(k1)
-        if (l == null) {
-          l = new java.util.ArrayList[Integer](); minted(g).put(k1, l)
-        }
-        l.add(q)
-        l = minted(g).get(k2)
-        if (l == null) {
-          l = new java.util.ArrayList[Integer](); minted(g).put(k2, l)
-        }
-        l.add(q)
+        val m = minted(st.grpOfBin(pBin(q)))
+        m.add(pairKey(pLs(q), pRd(q))); m.add(pairKey(pRs(q), pLd(q)))
       }
       q += 1
     }
     val bad = new Array[Boolean](nPairs)
-    gi = 0
-    while (gi < st.nGrps) {
-      val mit = minted(gi).entrySet().iterator()
-      while (mit.hasNext) {
-        val entry = mit.next()
-        if (existing(gi).contains(entry.getKey) ||
-            entry.getValue.size() > 1) {
-          val l = entry.getValue
-          var j = 0
-          while (j < l.size()) { bad(l.get(j).intValue()) = true; j += 1 }
-        }
+    q = 0
+    while (q < nPairs) {
+      if (pre(q)) {
+        val g = st.grpOfBin(pBin(q))
+        @inline def hit(k: Long) =
+          existing(g).count(k) > 0 || minted(g).count(k) > 1
+        bad(q) = hit(pairKey(pLs(q), pRd(q))) || hit(pairKey(pRs(q), pLd(q)))
       }
-      gi += 1
+      q += 1
     }
     // 4. emit
     val oSrc = new Array[Int](nE)

@@ -9,25 +9,37 @@ import org.apache.spark.sql.functions._
   * (A1) → annotations (J2/J3/J4/J6) → simplify (G2) → degree (A4) →
   * metadata (A5/A9/A10) → snapshots (S9) / Cytoscape JSON (S10).
   *
-  * One declarative plan per output — the reference's per-chromosome
-  * process fan-out (pipeline.sh GNU parallel) collapses into Spark
-  * partitioning; the chr1-task special-casing (whole-genome stats
-  * computed only there) disappears because the full-DF aggregates are
-  * computed once.
+  * Above [[Regime.ResidentMaxEdges]] rows, one declarative plan per
+  * output — the reference's per-chromosome process fan-out
+  * (pipeline.sh GNU parallel) collapses into Spark partitioning; the
+  * chr1-task special-casing (whole-genome stats computed only there)
+  * disappears because the full-DF aggregates are computed once. At or
+  * below it the tree writer reads vertices and edges computed in the
+  * driver, as the reference's one R process does ([[ResidentBuild]]).
   */
 object Pipeline {
 
   /** Everything the reference materializes per (organism, cell type)
-    * dataset. All members are lazy plans — callers pay only for what
-    * they write. */
-  case class BuiltDataset(
-      interactions: DataFrame, // post-threshold working set
-      nodes: DataFrame,        // annotated vertex table
-      edges: DataFrame,        // simplified, typed edge list with score
-      degrees: DataFrame,      // A4 per-vertex degree
-      graphMetadata: DataFrame,
-      suggestions: DataFrame,
-      chromosomes: DataFrame)
+    * dataset. Every member is a lazy plan, itself built on first use —
+    * callers pay only for what they read. `resident` is the same
+    * dataset with `nodes` and `edges` computed in the driver, when the
+    * build's inputs fit its cutoff ([[build]]'s `residentMaxEdges`):
+    * local frames, one fetch job on first use, and no vertex or
+    * annotation plan built; the tree writer reads that form. */
+  final class BuiltDataset private[core] (
+      val interactions: DataFrame, // post-threshold working set
+      plans: => (DataFrame, DataFrame),
+      residentPlans: => Option[(DataFrame, DataFrame)]) {
+    private lazy val nodesAndEdges = plans
+    lazy val nodes: DataFrame = nodesAndEdges._1 // annotated vertex table
+    lazy val edges: DataFrame = nodesAndEdges._2 // simplified, typed edges
+    lazy val degrees: DataFrame = GraphOps.degrees(edges) // A4
+    lazy val graphMetadata: DataFrame = GraphOps.graphMetadata(nodes, edges)
+    lazy val suggestions: DataFrame = Metadata.suggestions(nodes)
+    lazy val chromosomes: DataFrame = Metadata.chromosomes(nodes)
+    lazy val resident: BuiltDataset = residentPlans.fold(this)(ne =>
+      new BuiltDataset(interactions, ne, None))
+  }
 
   /** Optional annotation inputs (each `None` skips that join, like the
     * reference's organism-specific branches). */
@@ -39,12 +51,21 @@ object Pipeline {
 
   /** Build one dataset from a raw interaction table (PCHiC/HiC shaped,
     * see Interactions). `chromosome` = Some("7") slices F2-style;
-    * Some("PP") is the pseudo-chromosome (P-P edges only, F3). */
+    * Some("PP") is the pseudo-chromosome (P-P edges only, F3).
+    *
+    * `nodes` and `edges` are relational plans. When the thresholded
+    * working set and each annotation table have at most
+    * `residentMaxEdges` rows, the dataset's `resident` form holds local
+    * frames with the same rows and schemas instead: one job fetches the
+    * inputs and [[ResidentBuild]] computes the vertices and edges in the
+    * driver. `residentMaxEdges = 0` (or a larger input) keeps the
+    * relational plans there too, the at-scale form. */
   def build(raw: DataFrame,
             threshold: Double = 5.0,
             annotations: Annotations = Annotations(),
             chromosome: Option[String] = None,
-            hasNames: Boolean = true): BuiltDataset = {
+            hasNames: Boolean = true,
+            residentMaxEdges: Long = Regime.ResidentMaxEdges): BuiltDataset = {
     // F1 + F4: score threshold, MT drop — pushed to the scan by Catalyst.
     val working0 = Interactions.dropMT(
       Interactions.filterByThreshold(raw, threshold))
@@ -53,7 +74,32 @@ object Pipeline {
       case Some(c) if c != "PP" => Interactions.filterByChromosome(working0, c)
       case _                    => working0
     }
+    val ppOnly = chromosome.contains("PP")
+    new BuiltDataset(working,
+      relational(working, annotations, ppOnly, hasNames),
+      resident(working, annotations, ppOnly, hasNames, residentMaxEdges))
+  }
 
+  /** [[build]]'s (nodes, edges) as local frames computed in the driver,
+    * when its inputs have at most `maxRows` rows each. */
+  private def resident(working: DataFrame, annotations: Annotations,
+                       ppOnly: Boolean, hasNames: Boolean, maxRows: Long)
+      : Option[(DataFrame, DataFrame)] = {
+    lazy val in = ResidentBuild.inputs(working, annotations, hasNames)
+    if (maxRows <= 0L || !ResidentBuild.supports(in)) None
+    else Regime.collectAtMost(maxRows, in.all: _*).map { rows =>
+      val (nodes, edges) = ResidentBuild.build(in.fill(rows), ppOnly)
+      val (nodeSchema, edgeSchema) = ResidentBuild.schemas(in)
+      val spark = working.sparkSession
+      (spark.createDataFrame(nodes, nodeSchema),
+        spark.createDataFrame(edges, edgeSchema))
+    }
+  }
+
+  /** [[build]]'s (nodes, edges) as lazy relational plans. */
+  private def relational(working: DataFrame, annotations: Annotations,
+                         ppOnly: Boolean, hasNames: Boolean)
+      : (DataFrame, DataFrame) = {
     // G1/G2 + J9: edges → simplify (first-wins by score then key — a
     // total order, deterministic under any partitioning) → bait typing.
     val rawEdges = Interactions.edges(working, Some(working.columns(11)))
@@ -62,8 +108,7 @@ object Pipeline {
       Seq(col("score"), col("src"), col("dst")))
     val typed0 = Interactions.addTypes(simplified)
     // F3: the PP pseudo-chromosome keeps only promoter-promoter edges.
-    val typed = if (chromosome.contains("PP"))
-      Interactions.filterPPOnly(typed0) else typed0
+    val typed = if (ppOnly) Interactions.filterPPOnly(typed0) else typed0
 
     // A1 vertex derivation + the annotation joins the reference applies
     // in network_generator.R:98-122 order: J2 bait names, J3 other-end
@@ -72,17 +117,7 @@ object Pipeline {
     val v1 = annotations.baitNames.fold(v0)(Annotate.overwriteBaitNames(v0, _))
     val v2 = annotations.aliasRanges.fold(v1)(Annotate.annotateOtherEnds(v1, _))
     val v3 = annotations.aliasNames.fold(v2)(Annotate.annotatePromoters(v2, _))
-    val nodes = annotations.intronic.fold(v3)(Annotate.flagIntronic(v3, _))
-
-    val deg = GraphOps.degrees(typed)
-    BuiltDataset(
-      interactions = working,
-      nodes = nodes,
-      edges = typed,
-      degrees = deg,
-      graphMetadata = GraphOps.graphMetadata(nodes, typed),
-      suggestions = Metadata.suggestions(nodes),
-      chromosomes = Metadata.chromosomes(nodes))
+    (annotations.intronic.fold(v3)(Annotate.flagIntronic(v3, _)), typed)
   }
 
   /** Hi-C-mode dataset build (reference network_generator.R:52-62, 95):
@@ -109,15 +144,16 @@ object Pipeline {
       .withColumn("score", lit(1.0)).withColumn("type", lit("O-O"))
     val nodes = Interactions.vertices(working, hasNames = false,
       hicMode = true)
-    BuiltDataset(
-      interactions = working,
-      nodes = nodes,
-      edges = typed,
-      degrees = GraphOps.degrees(typed),
-      graphMetadata = GraphOps.graphMetadata(nodes, typed),
-      suggestions = Metadata.suggestions(nodes),
-      chromosomes = Metadata.chromosomes(nodes))
+    new BuiltDataset(working, (nodes, typed), None)
   }
+
+  /** Edge-count cutoff for the tree's document writer: at or below,
+    * one driver thread streams the sorted elements into single
+    * chr<c>.json files (byte-golden layout); above, the executors
+    * write per-document line directories. 20M edges ≈ several GB of
+    * document JSON — around where one ~100 MB/s writer thread turns
+    * into minutes of serial tail. */
+  val DocStreamMaxEdges = 20000000L
 
   /** S10/S11 end-to-end output tree — the per-dataset layout the
     * reference's pipeline materializes (pipeline.sh:109-124,
@@ -150,16 +186,8 @@ object Pipeline {
     * document parses identically). Below the cutoff the byte-golden
     * single-file layout is preserved. `distributedDocs` overrides the
     * regime explicitly (tests; deployments that always want dirs).
-    */
-  /** Edge-count cutoff for the tree's document writer: at or below,
-    * one driver thread streams the sorted elements into single
-    * chr<c>.json files (byte-golden layout); above, the executors
-    * write per-document line directories. 20M edges ≈ several GB of
-    * document JSON — around where one ~100 MB/s writer thread turns
-    * into minutes of serial tail. */
-  val DocStreamMaxEdges = 20000000L
-
-  /** `docLayout` selects the per-document position enrichment
+    *
+    * `docLayout` selects the per-document position enrichment
     * (pipeline.sh:109-118 / layout_api_enricher:62-77 — the reference
     * pipes every chr<c>.json through a layout and serves
     * `position{x,y}` on every node): "grid" (default) is the
@@ -169,7 +197,7 @@ object Pipeline {
     * tree scale; "cose" runs the per-document force layout
     * (Layout.cosePerDoc — interactively-sized documents only, the
     * reference's own enricher contract); None skips enrichment. */
-  def writeDatasetTree(ds: BuiltDataset, outDir: String,
+  def writeDatasetTree(dataset: BuiltDataset, outDir: String,
                        features: Option[DataFrame] = None,
                        nReplicates: Int = 3, seed: Long = 42L,
                        chromosomesToWrite: Option[Seq[String]] = None,
@@ -181,6 +209,7 @@ object Pipeline {
     import scala.concurrent.duration.Duration
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/chromosomes"))
+    val ds = dataset.resident
     // the tree reads nodes/edges many times over (three iterative
     // metadata passes, the randomization envelope, one document per
     // chromosome): pin both once so every pass is a cache scan, not a
@@ -189,8 +218,14 @@ object Pipeline {
     // symmetrized edge list is ALSO shared (CC + diameter both consume
     // it), persisted here so the concurrent lanes below never race an
     // unpersist against each other's scans.
-    val edgesC = ds.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesC = ds.nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    // A local frame (the resident build's) is already computed: it is
+    // read in place, not pinned, and its rows are counted with no job.
+    val localEdges = Regime.localRows(ds.edges)
+    val localNodes = Regime.localRows(ds.nodes).isDefined
+    val edgesC = if (localEdges.isDefined) ds.edges
+      else ds.edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val nodesC = if (localNodes) ds.nodes
+      else ds.nodes.persist(StorageLevel.MEMORY_AND_DISK)
     val sym = GraphOps.symmetrize(edgesC).persist(StorageLevel.MEMORY_AND_DISK)
     // per-lane wall-clock, recorded into [[lastTreeTimings]] (the s11
     // bench artifact's sub-component attribution — r13 verdict #3)
@@ -209,7 +244,7 @@ object Pipeline {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      // materialize the EDGE cache once before the fan-out (it
+      // materialize a pinned EDGE cache once before the fan-out (it
       // underlies sym and most lanes, and its row count routes the
       // document writer). Every lane runs at the session's own shuffle
       // width — no lane writes session conf, so the concurrent lanes
@@ -217,13 +252,14 @@ object Pipeline {
       // materializes INSIDE the lanes that first touch it (concurrent
       // first readers of one cached partition block on the computing
       // thread, they don't recompute).
-      val nEdges = edgesC.count()
-      // materialize the NODES cache before the fan-out too: four lanes
-      // (graphMetadata, suggestions, chromosomes, documents) block on
-      // it, and under the concurrent region the annotated-vertex build
-      // interleaves with every other lane's stages — measured ~18 s of
-      // lane wall-clock vs ~2 s when it runs with the whole box here
-      timed("nodesCache") { nodesC.count() }
+      val nEdges = localEdges.getOrElse(edgesC.count())
+      // materialize a pinned NODES cache before the fan-out too: four
+      // lanes (graphMetadata, suggestions, chromosomes, documents) block
+      // on it, and under the concurrent region the annotated-vertex
+      // build interleaves with every other lane's stages — measured
+      // ~18 s of lane wall-clock vs ~2 s when it runs with the whole
+      // box here
+      if (!localNodes) timed("nodesCache") { nodesC.count() }
       val fSym = Future(timed("symmetrize") { sym.count() })
       val fCs = fSym.map(nSym => timed("componentStats") {
         GraphOps.componentStatsSym(sym, nSym).collect()(0) })
@@ -299,8 +335,8 @@ object Pipeline {
     } finally {
       pool.shutdown()
       sym.unpersist(blocking = false)
-      edgesC.unpersist(blocking = false)
-      nodesC.unpersist(blocking = false)
+      if (localEdges.isEmpty) edgesC.unpersist(blocking = false)
+      if (!localNodes) nodesC.unpersist(blocking = false)
       // publish the run's sub-component timings for the bench artifact;
       // chromosomeDocsWrite is the stream writer's pure file-IO time
       // (the render-vs-write split inside the chromosomeDocs lane —
@@ -336,7 +372,7 @@ object Pipeline {
     * [[writeDatasetTree]] writes for those documents (per-document
     * layouts depend only on the document's own members/edges —
     * asserted byte-for-byte in PipelineTreeSpec). */
-  def refreshChromosomeDocs(ds: BuiltDataset, outDir: String,
+  def refreshChromosomeDocs(dataset: BuiltDataset, outDir: String,
                             chrs: Seq[String],
                             distributedDocs: Option[Boolean] = None,
                             docLayout: Option[String] = Some("grid")): Unit = {
@@ -344,6 +380,7 @@ object Pipeline {
     import org.apache.spark.storage.StorageLevel
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/chromosomes"))
+    val ds = dataset.resident
     def chrOf(c: org.apache.spark.sql.Column) = split(c, "_").getItem(0)
     // read twice below (count for the regime route + the write) and
     // up to twice more for positions: pin the narrowed set once

@@ -40,6 +40,15 @@ import org.apache.spark.unsafe.Platform
   *                                  aggregation runs in the driver
   *                                  ([[ResidentChas]]); above it the
   *                                  bucketed overlap join
+  *   - s11       Pipeline.build     `residentMaxEdges` (the
+  *                                  thresholded working set's rows and
+  *                                  each annotation table's, each): at
+  *                                  or below it the build's `resident`
+  *                                  form, which the tree writer reads,
+  *                                  computes the vertices and edges in
+  *                                  the driver ([[ResidentBuild]]) as
+  *                                  local frames; above it the lazy
+  *                                  relational plans
   *   - a17       Chas.featuresMetadataSubnets  `residentMaxEdges`
   *                                  (edge rows and feature rows, each;
   *                                  no distance match): at or below it
@@ -73,7 +82,13 @@ object Regime {
     * of its inputs has at most this many rows (one replicate, 4-core
     * host, medians of 5: 6.7 s there against 14.4 s over the
     * relational plans at 490k edges, 3.3 vs 8.4 s at sf0.1's 274k),
-    * and [[Chas.aggregateOntoFragments]] below its own measured
+    * a [[Pipeline.build]]'s `resident` form computes its vertices and
+    * edges in the driver when the working set and each annotation table
+    * have at most this many rows (the fetch, the kernel and the local
+    * frames took 3.3–4.4 s against 9.0–10.5 s to pin and count the
+    * relational nodes and edges at sf0.1's 276k working rows, 6.1–6.4 s
+    * against 11.0–12.1 s at 497k; warm session, 4-core host), and
+    * [[Chas.aggregateOntoFragments]] below its own measured
     * crossover. The value is ~3x the reference's largest dataset (Human
     * Monocyte, 171k edges / 96k nodes; BASELINE.md). The serving copy measured 10.6 MB (Spark's
     * SizeEstimator) for 15.5k edges / 9.9k nodes, so the cutoff bounds
@@ -98,10 +113,7 @@ object Regime {
   def collectAtMost(maxRows: Long, dfs: DataFrame*): Option[Seq[Array[Row]]] =
     if (maxRows <= 0L) None
     else {
-      val local = dfs.map(_.queryExecution.optimizedPlan match {
-        case l: LocalRelation => Some(l.data.length)
-        case _ => None
-      })
+      val local = dfs.map(localRows)
       val remote = dfs.indices.filter(local(_).isEmpty)
       if (local.exists(_.exists(_ > maxRows))) None
       else {
@@ -173,6 +185,15 @@ object Regime {
           }
         }
       }
+    }
+
+  /** The row count of a local frame (its optimized plan a
+    * `LocalRelation`, as `createDataFrame` over rows gives), read with
+    * no job; None for a planned frame. */
+  def localRows(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data.length.toLong)
+      case _ => None
     }
 
   /** Catalyst's estimated size of the frame in bytes — read from the

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.core.Pipeline
+import graft.core.{Pipeline, Regime}
 
 /** Shared builder for the output-tree golden: ONE build configuration
   * used both by the checked-in golden generator (GoldenGen) and the
@@ -13,7 +13,9 @@ object GoldenTree {
   val sfDir = "/root/testdata/sf0.001"
   val goldenDir = "src/test/resources/golden"
 
-  def dataset(spark: SparkSession): Pipeline.BuiltDataset =
+  def dataset(spark: SparkSession,
+              residentMaxEdges: Long = Regime.ResidentMaxEdges)
+      : Pipeline.BuiltDataset =
     Pipeline.build(
       TestMapping.interactions(spark, sfDir),
       threshold = TestMapping.ThinScore,
@@ -21,11 +23,13 @@ object GoldenTree {
         baitNames = Some(TestMapping.baitNamesTable(spark, sfDir)),
         aliasRanges = Some(TestMapping.aliasRanges(spark, sfDir)),
         aliasNames = Some(TestMapping.aliasTable(spark, sfDir)),
-        intronic = Some(TestMapping.intronicRegions(spark, sfDir))))
+        intronic = Some(TestMapping.intronicRegions(spark, sfDir))),
+      residentMaxEdges = residentMaxEdges)
 
   def write(spark: SparkSession, outDir: String,
-            distributedDocs: Option[Boolean] = None): Unit = {
-    val ds = dataset(spark)
+            distributedDocs: Option[Boolean] = None,
+            residentMaxEdges: Long = Regime.ResidentMaxEdges): Unit = {
+    val ds = dataset(spark, residentMaxEdges)
     val twoChrs = ds.chromosomes.collect().map(_.getString(0)).take(2).toSeq
     Pipeline.writeDatasetTree(ds, outDir,
       features = Some(TestMapping.features(spark, sfDir)),

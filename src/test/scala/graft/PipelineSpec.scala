@@ -1,24 +1,31 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.{Metadata, Pipeline}
+import graft.core.{Metadata, Pipeline, Regime}
 
 /** End-to-end composition: the reference's dataset-build flow on the
-  * synthetic fixture, plus A9/A10 metadata. */
+  * synthetic fixture, plus A9/A10 metadata. Every build runs on both
+  * routes: the `resident` form at `residentMaxEdges` 0 (the relational
+  * plans) and at the default (the driver kernel). */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  private val Routes = Seq(0L, Regime.ResidentMaxEdges)
+
   test("build: threshold, MT drop, simplify, typing, degree, metadata") {
-    val ds = Pipeline.build(pchicFixture, threshold = 5.0)
-    assert(ds.interactions.count() == 5)
-    assert(ds.edges.count() == 2)
-    assert(ds.nodes.count() == 3)
-    val meta = ds.graphMetadata.collect()(0)
-    assert(meta.getLong(meta.fieldIndex("nodes")) == 3L)
-    assert(meta.getLong(meta.fieldIndex("edges")) == 2L)
-    val deg = ds.degrees.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(deg("1_1000_1999") == 2L)
+    for (cut <- Routes) {
+      val ds = Pipeline.build(pchicFixture, threshold = 5.0,
+        residentMaxEdges = cut).resident
+      assert(ds.interactions.count() == 5)
+      assert(ds.edges.count() == 2)
+      assert(ds.nodes.count() == 3)
+      val meta = ds.graphMetadata.collect()(0)
+      assert(meta.getLong(meta.fieldIndex("nodes")) == 3L)
+      assert(meta.getLong(meta.fieldIndex("edges")) == 2L)
+      val deg = ds.degrees.collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(deg("1_1000_1999") == 2L)
+    }
   }
 
   test("buildHiC: all-O vertices, empty names, unweighted O-O edges") {
@@ -41,33 +48,43 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("chromosome slice keeps inter-chromosomal edges touching it") {
-    val ds = Pipeline.build(pchicFixture, 5.0, chromosome = Some("2"))
-    // rows touching chr2: bait2-oe1(8.0), bait1-oe2(7.0 + 5.5), self-loop
-    assert(ds.interactions.count() == 4)
-    assert(ds.edges.count() == 1) // one undirected pair after simplify
+    for (cut <- Routes) {
+      val ds = Pipeline.build(pchicFixture, 5.0, chromosome = Some("2"),
+        residentMaxEdges = cut).resident
+      // rows touching chr2: bait2-oe1(8.0), bait1-oe2(7.0 + 5.5), self-loop
+      assert(ds.interactions.count() == 4)
+      assert(ds.edges.count() == 1) // one undirected pair after simplify
+    }
   }
 
   test("PP pseudo-chromosome keeps only promoter-promoter edges") {
-    val ds = Pipeline.build(pchicFixture, 5.0, chromosome = Some("PP"))
-    val types = ds.edges.select("type").collect().map(_.getString(0))
-    assert(types.forall(_ == "P-P"))
+    for (cut <- Routes) {
+      val ds = Pipeline.build(pchicFixture, 5.0, chromosome = Some("PP"),
+        residentMaxEdges = cut).resident
+      val types = ds.edges.select("type").collect().map(_.getString(0))
+      assert(types.forall(_ == "P-P"))
+    }
   }
 
   test("search over the built dataset returns a flagged ego subnet") {
-    val ds = Pipeline.build(pchicFixture, 5.0)
-    val sub = Pipeline.searchDataset(ds, "Hoxa1")
-    val n = sub.nodes.collect().map(r =>
-      r.getString(0) -> r.getBoolean(r.fieldIndex("searched"))).toMap
-    assert(n("1_1000_1999"))
-    assert(n.size == 3) // seed + both neighbors
+    for (cut <- Routes) {
+      val ds = Pipeline.build(pchicFixture, 5.0, residentMaxEdges = cut).resident
+      val sub = Pipeline.searchDataset(ds, "Hoxa1")
+      val n = sub.nodes.collect().map(r =>
+        r.getString(0) -> r.getBoolean(r.fieldIndex("searched"))).toMap
+      assert(n("1_1000_1999"))
+      assert(n.size == 3) // seed + both neighbors
+    }
   }
 
   test("A9 suggestions: distinct sorted names, empties dropped") {
-    val ds = Pipeline.build(pchicFixture, 5.0)
-    val sugg = Metadata.suggestions(ds.nodes).collect().map(_.getString(0))
-    assert(sugg.contains("Hoxa1") && sugg.contains("Extra"))
-    assert(!sugg.contains(""))
-    assert(sugg.sameElements(sugg.sorted))
+    for (cut <- Routes) {
+      val ds = Pipeline.build(pchicFixture, 5.0, residentMaxEdges = cut).resident
+      val sugg = Metadata.suggestions(ds.nodes).collect().map(_.getString(0))
+      assert(sugg.contains("Hoxa1") && sugg.contains("Extra"))
+      assert(!sugg.contains(""))
+      assert(sugg.sameElements(sugg.sorted))
+    }
   }
 
   test("A10 chromosome list: natural sort, PP appended, MT absent") {

@@ -7,27 +7,33 @@ import scala.jdk.CollectionConverters._
   * sf0.001 must reproduce the checked-in tree byte-for-byte — the
   * pipeline.sh:109-124 layout (metadata.json, suggestions.json,
   * chromosomes.json, features_metadata.json, chromosomes/chr*.json).
-  * Regenerate deliberately with `sbt "Test/runMain graft.GoldenGen"`. */
+  * Regenerate deliberately with `sbt "Test/runMain graft.GoldenGen"`.
+  * Every build runs on both routes: `residentMaxEdges` 0 (the
+  * relational plans) and the default (the driver kernel). */
 class PipelineTreeSpec extends SparkSpec {
+
+  private val Routes = Seq(0L, graft.core.Regime.ResidentMaxEdges)
 
   test("writeDatasetTree reproduces the checked-in golden tree byte-exact") {
     val golden = Paths.get(GoldenTree.goldenDir)
     assert(Files.isDirectory(golden),
       s"golden tree missing - run: sbt 'Test/runMain graft.GoldenGen'")
-    val out = Files.createTempDirectory("grafttree").toString
-    GoldenTree.write(spark, out)
+    for (cut <- Routes) {
+      val out = Files.createTempDirectory("grafttree").toString
+      GoldenTree.write(spark, out, residentMaxEdges = cut)
 
-    def rel(root: Path): Set[String] = Files.walk(root).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString).toSet
-    val expected = rel(golden)
-    assert(expected.nonEmpty && expected.contains("metadata.json"))
-    assert(rel(Paths.get(out)) == expected)
+      def rel(root: Path): Set[String] = Files.walk(root).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).toSet
+      val expected = rel(golden)
+      assert(expected.nonEmpty && expected.contains("metadata.json"))
+      assert(rel(Paths.get(out)) == expected)
 
-    expected.foreach { f =>
-      val e = Files.readString(golden.resolve(f))
-      val a = Files.readString(Paths.get(out).resolve(f))
-      assert(a == e, s"$f differs from golden")
+      expected.foreach { f =>
+        val e = Files.readString(golden.resolve(f))
+        val a = Files.readString(Paths.get(out).resolve(f))
+        assert(a == e, s"$f differs from golden")
+      }
     }
   }
 
@@ -71,21 +77,23 @@ class PipelineTreeSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq.sorted
     assert(docs.nonEmpty)
     val chrs = docs.map(_.stripPrefix("chr").stripSuffix(".json"))
-    // same dataset, but ONLY the dirty chromosomes re-run through the
-    // delta path — the bytes must equal the full writeDatasetTree's
-    val out = Files.createTempDirectory("graftrefresh").toString
-    graft.core.Pipeline.refreshChromosomeDocs(
-      GoldenTree.dataset(spark), out, chrs)
-    chrs.foreach { c =>
-      assert(Files.readString(Paths.get(s"$out/chromosomes/chr$c.json")) ==
-        Files.readString(golden.resolve(s"chromosomes/chr$c.json")),
-        s"chr$c.json differs from the full-tree bytes")
+    for (cut <- Routes) {
+      // same dataset, but ONLY the dirty chromosomes re-run through the
+      // delta path — the bytes must equal the full writeDatasetTree's
+      val out = Files.createTempDirectory("graftrefresh").toString
+      graft.core.Pipeline.refreshChromosomeDocs(
+        GoldenTree.dataset(spark, cut), out, chrs)
+      chrs.foreach { c =>
+        assert(Files.readString(Paths.get(s"$out/chromosomes/chr$c.json")) ==
+          Files.readString(golden.resolve(s"chromosomes/chr$c.json")),
+          s"chr$c.json differs from the full-tree bytes")
+      }
+      // the refresh writes exactly the dirty documents, nothing else
+      val written = Files.walk(Paths.get(out)).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(p => Paths.get(out).relativize(p).toString).toSet
+      assert(written == chrs.map(c => s"chromosomes/chr$c.json").toSet)
     }
-    // the refresh writes exactly the dirty documents, nothing else
-    val written = Files.walk(Paths.get(out)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(p => Paths.get(out).relativize(p).toString).toSet
-    assert(written == chrs.map(c => s"chromosomes/chr$c.json").toSet)
   }
 
   test("forced-distributed tree write matches the golden documents") {
@@ -94,24 +102,27 @@ class PipelineTreeSpec extends SparkSpec {
     // whose concatenated rows must equal the golden single file; the
     // metadata JSONs are identical single files in both regimes
     val golden = Paths.get(GoldenTree.goldenDir)
-    val out = Files.createTempDirectory("grafttreedist").toString
-    GoldenTree.write(spark, out, distributedDocs = Some(true))
-    Files.walk(golden).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .foreach { p =>
-        val f = golden.relativize(p).toString
-        val e = Files.readString(p)
-        val target = Paths.get(out).resolve(f)
-        if (f.startsWith("chromosomes/")) {
-          assert(Files.isDirectory(target), s"$f should be a line dir")
-          val parts = Files.list(target).iterator().asScala
-            .filter(_.getFileName.toString.startsWith("part-")).toSeq
-          assert(parts.size == 1, s"$f: one task per document")
-          val got = Files.readAllLines(parts.head).asScala.mkString("")
-          assert(got == e, s"$f differs from golden (concatenated)")
-        } else {
-          assert(Files.readString(target) == e, s"$f differs from golden")
+    for (cut <- Routes) {
+      val out = Files.createTempDirectory("grafttreedist").toString
+      GoldenTree.write(spark, out, distributedDocs = Some(true),
+        residentMaxEdges = cut)
+      Files.walk(golden).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .foreach { p =>
+          val f = golden.relativize(p).toString
+          val e = Files.readString(p)
+          val target = Paths.get(out).resolve(f)
+          if (f.startsWith("chromosomes/")) {
+            assert(Files.isDirectory(target), s"$f should be a line dir")
+            val parts = Files.list(target).iterator().asScala
+              .filter(_.getFileName.toString.startsWith("part-")).toSeq
+            assert(parts.size == 1, s"$f: one task per document")
+            val got = Files.readAllLines(parts.head).asScala.mkString("")
+            assert(got == e, s"$f differs from golden (concatenated)")
+          } else {
+            assert(Files.readString(target) == e, s"$f differs from golden")
+          }
         }
-      }
+    }
   }
 }
