@@ -65,8 +65,10 @@ object GraphOps {
     * fanned out over the cluster. One task builds the int CSR + the
     * per-component root-BFS layout ([[LocalGraph.diamLayout]]); the
     * driver broadcasts the CSR arrays (ints only — a few MB per million
-    * edges) and walks fringe depths DESCENDING, running each depth's
-    * still-open candidate sources as one parallel BFS batch. Per
+    * edges) and walks fringe depths DESCENDING
+    * ([[LocalGraph.ifubDescent]], the descent the driver form
+    * [[LocalGraph.diameterDriver]] shares), running each depth's
+    * still-open candidate sources as one parallel BFS job. Per
     * component the processed set is exactly the sequential iFUB's
     * (process depth i only while lb < 2·i), so the result is identical
     * and exact — but a near-regular graph whose bounds close slowly
@@ -113,42 +115,23 @@ object GraphOps {
     val sc = spark.sparkContext
     val bc = sc.broadcast((layout.off, layout.adj))
     try {
-      val comp = layout.comp
-      val lb = layout.rootEcc.map(_.toLong)
-      val best = layout.root.clone() // witness source per component
-      var i = layout.maxDepth
-      while (i >= 1) {
-        val batch = new scala.collection.mutable.ArrayBuffer[Int]()
-        var v = 0
-        while (v < layout.n) {
-          if (layout.depth(v) == i && lb(comp(v)) < 2L * i) batch += v
-          v += 1
-        }
-        if (batch.nonEmpty) {
-          val slices = math.max(1, math.min(batch.length,
-            sc.defaultParallelism * 4))
-          val eccs = sc.parallelize(batch.toSeq, slices)
-            .mapPartitions { sources =>
-              val (off, adj) = bc.value
-              val n = off.length - 1
-              val dist = new Array[Int](n)
-              val stamp = new Array[Int](n)
-              val queue = new Array[Int](n)
-              var version = 0
-              sources.map { s =>
-                version += 1
-                (s, LocalGraph.eccInto(off, adj, s, dist, stamp, queue, version))
-              }
-            }.collect()
-          // the bound is a max (any order); the witness needs id order
-          val folded = if (!certify) eccs
-            else eccs.sortWith((a, b) => LocalChain.bcmp(ids(a._1), ids(b._1)) < 0)
-          for ((s, e) <- folded) {
-            val c = comp(s)
-            if (e > lb(c)) { lb(c) = e.toLong; best(c) = s }
-          }
-        }
-        i -= 1
+      // each fringe batch is one job over the broadcast CSR
+      val (lb, best) = LocalGraph.ifubDescent(layout,
+          if (certify) Some(ids) else None) { batch =>
+        sc.parallelize(batch.toSeq,
+            math.max(1, math.min(batch.length, sc.defaultParallelism * 4)))
+          .mapPartitions { sources =>
+            val (off, adj) = bc.value
+            val n = off.length - 1
+            val dist = new Array[Int](n)
+            val stamp = new Array[Int](n)
+            val queue = new Array[Int](n)
+            var version = 0
+            sources.map { s =>
+              version += 1
+              (s, LocalGraph.eccInto(off, adj, s, dist, stamp, queue, version))
+            }
+          }.collect()
       }
       val cert = if (!certify) Nil else (0 until layout.nComp).iterator
         .filter(c => lb(c) > 0L) // isolated nodes witness nothing
@@ -723,7 +706,8 @@ object GraphOps {
 
   /** A8 global clustering coefficient (transitivity):
     * 3·triangles / triads. Triangles via ordered-id edge self-joins
-    * (each triangle counted once); triads = Σ d(d-1)/2.
+    * (each triangle counted once); triads = Σ d(d-1)/2, 0 for an empty
+    * edge list (transitivity 0.0 then).
     * Reference: transitivity(net), network_generator_lib.R:436. */
   def transitivity(edges: DataFrame): DataFrame = {
     // the ordered pair set feeds FOUR subtrees (three legs of the
@@ -739,7 +723,8 @@ object GraphOps {
         col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
       .agg(count(lit(1)).as("triangles"))
     val triads = degrees(e.select(col("a").as("src"), col("b").as("dst")))
-      .agg(sum(col("degree") * (col("degree") - 1) / 2).as("triads"))
+      .agg(coalesce(sum(col("degree") * (col("degree") - 1) / 2), lit(0.0))
+        .as("triads"))
     tri.crossJoin(triads)
       .select(
         col("triangles"),
@@ -751,22 +736,25 @@ object GraphOps {
 
   /** A5 graph summary metadata: nodes, edges, mean degree (2 dp),
     * promoter/other-end counts, P-P/P-O edge counts, interchromosomal
-    * edge count. Reference: generate_graph_metadata,
-    * network_generator_lib.R:411-459. */
+    * edge count. Every count of an empty table is 0, and so is the
+    * mean degree of a graph with no nodes. Reference:
+    * generate_graph_metadata, network_generator_lib.R:411-459. */
   def graphMetadata(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    def countOf(c: org.apache.spark.sql.Column) =
+      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     val n = nodes.agg(
       count(lit(1)).as("nodes"),
-      sum(when(col("type") === "P", 1L).otherwise(0L)).as("promoters"),
-      sum(when(col("type") === "O", 1L).otherwise(0L)).as("other_ends"))
+      countOf(col("type") === "P").as("promoters"),
+      countOf(col("type") === "O").as("other_ends"))
     val e = edges.agg(
       count(lit(1)).as("edges"),
-      sum(when(col("type") === "P-P", 1L).otherwise(0L)).as("pp_edges"),
-      sum(when(col("type") === "P-O", 1L).otherwise(0L)).as("po_edges"),
-      sum(when(split(col("src"), "_").getItem(0) =!=
-               split(col("dst"), "_").getItem(0), 1L).otherwise(0L))
-        .as("interchromosomal"))
+      countOf(col("type") === "P-P").as("pp_edges"),
+      countOf(col("type") === "P-O").as("po_edges"),
+      countOf(split(col("src"), "_").getItem(0) =!=
+        split(col("dst"), "_").getItem(0)).as("interchromosomal"))
     n.crossJoin(e).withColumn("mean_degree",
-      graft.ext.Num.roundLike(lit(2.0) * col("edges") / col("nodes"), 2))
+      when(col("nodes") === 0L, lit(0.0)).otherwise(
+        graft.ext.Num.roundLike(lit(2.0) * col("edges") / col("nodes"), 2)))
   }
 
   /** Fixed-point integer PageRank over the undirected edge list — the

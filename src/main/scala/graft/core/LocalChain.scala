@@ -54,7 +54,7 @@ private[graft] object LocalChain {
     * ASCII (all ids in this engine) UTF-16 code-unit order equals
     * UTF-8 byte order, so compare chars and only fall back to real
     * UTF8String comparison when a non-ASCII char decides. */
-  private[core] def bcmp(a: String, b: String): Int = {
+  private[graft] def bcmp(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
     while (i < n) {

@@ -17,7 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * a few ms where the driver-loop shape took tens of seconds. GraphOps
   * routes to this below `LocalMaxEdges` symmetrized rows and keeps the
   * distributed chains above it (the regime split is structural, same as
-  * the exact-BFS node guard).
+  * the exact-BFS node guard). The tree writer's driver route
+  * (Pipeline.writeDatasetTree) runs the same algorithms on a CSR built
+  * in the driver, with no task at all.
   *
   * Determinism: component labels are the component-minimum node id
   * under UTF8String binary ordering — the ordering Spark's `min`/
@@ -85,6 +87,7 @@ private[graft] object LocalGraph {
       }
       def get(i: Int): Int = a(i)
       def size: Int = len
+      def toArray: Array[Int] = java.util.Arrays.copyOf(a, len)
     }
   }
 
@@ -105,7 +108,6 @@ private[graft] object LocalGraph {
     (0 until g.n).iterator.map(v => (g.ids(v), minId(comp(v))))
   }
 
-  /** (componentCount, largestComponentSize, totalNodes). */
   /** Fixed-point integer PageRank on the CSR — the one-task twin of
     * [[GraphOps.pageRank]]'s relational rounds: the IDENTICAL LONG
     * arithmetic (contrib = r div deg, r' = 0.15·scale + (85·s) div
@@ -189,6 +191,7 @@ private[graft] object LocalGraph {
     Iterator.range(0, n).map(v => (g.ids(v), g.ids(lab(v))))
   }
 
+  /** (componentCount, largestComponentSize, totalNodes). */
   def componentStats(g: Csr): (Long, Long, Long) = {
     val comp = compIds(g)
     val nComp = if (comp.isEmpty) 0 else comp.max + 1
@@ -229,7 +232,8 @@ private[graft] object LocalGraph {
     * eccentricity (the descent's starting lower bound). Built in ONE
     * task, collected to the driver (≤ a few MB per million nodes),
     * broadcast back for the batched fringe BFS jobs
-    * (GraphOps.diameterLocalSym). */
+    * (GraphOps.diameterLocalSym) — or built in the driver and walked on
+    * driver threads ([[diameterDriver]]). */
   final case class DiamLayout(off: Array[Int], adj: Array[Int],
                               comp: Array[Int], depth: Array[Int],
                               nComp: Int, root: Array[Int],
@@ -335,6 +339,129 @@ private[graft] object LocalGraph {
               version: Int): Int = {
     val visited = bfsInto(off, adj, source, dist, stamp, queue, version)
     dist(queue(visited - 1))
+  }
+
+  /** The iFUB fringe descent over a [[diamLayout]], with the batch
+    * evaluation left to the caller (GraphOps.diameterLocalSym runs each
+    * batch as a Spark job, [[diameterDriver]] on driver threads).
+    * Depths run DESCENDING; depth i's batch is every node at depth i
+    * whose component is still open (lb < 2·i), and `eccs` returns its
+    * (source, eccentricity) pairs in any order. Per component the
+    * processed set is exactly the sequential iFUB's, so the bound is
+    * exact. With `ids` the batch folds in id order (binary string
+    * order) with strict improvement only, so the witness is the first
+    * (depth desc, id asc) source reaching the final bound; without,
+    * the fold order is the batch's own (the bound is a max). Returns
+    * per component (bound, witness source), the witness starting at
+    * the root. */
+  def ifubDescent(l: DiamLayout, ids: Option[Array[String]])(
+      eccs: Array[Int] => Array[(Int, Int)]): (Array[Long], Array[Int]) = {
+    val lb = l.rootEcc.map(_.toLong)
+    val best = l.root.clone()
+    var i = l.maxDepth
+    while (i >= 1) {
+      val batch = new it.IntBuf()
+      var v = 0
+      while (v < l.n) {
+        if (l.depth(v) == i && lb(l.comp(v)) < 2L * i) batch.add(v)
+        v += 1
+      }
+      if (batch.size > 0) {
+        val got = eccs(batch.toArray)
+        val folded = ids.fold(got)(id =>
+          got.sortWith((a, b) => LocalChain.bcmp(id(a._1), id(b._1)) < 0))
+        for ((s, e) <- folded) {
+          val c = l.comp(s)
+          if (e > lb(c)) { lb(c) = e.toLong; best(c) = s }
+        }
+      }
+      i -= 1
+    }
+    (lb, best)
+  }
+
+  /** Exact diameter by [[ifubDescent]] with each fringe batch's BFS
+    * spread over the common fork-join pool's driver threads: one
+    * strided slice of the batch per thread, each on its own BFS state.
+    * 0 for an empty graph. */
+  def diameterDriver(g: Csr): Long = {
+    val l = diamLayout(g)
+    if (l.nComp == 0) 0L
+    else ifubDescent(l, None) { sources =>
+      val k = math.min(sources.length,
+        java.util.concurrent.ForkJoinPool.getCommonPoolParallelism + 1)
+      val ecc = new Array[Int](sources.length)
+      java.util.stream.IntStream.range(0, k).parallel().forEach { t =>
+        val dist = new Array[Int](l.n)
+        val stamp = new Array[Int](l.n)
+        val queue = new Array[Int](l.n)
+        var j = t
+        while (j < sources.length) {
+          ecc(j) = eccInto(l.off, l.adj, sources(j), dist, stamp, queue, j + 1)
+          j += k
+        }
+      }
+      sources.zip(ecc)
+    }._1.max
+  }
+
+  /** (triangles, triads) of the simple graph under the symmetric CSR:
+    * each triangle counted once, triads = Σ d(d-1)/2 over distinct
+    * neighbors — GraphOps.transitivity's two counts, which read the
+    * distinct unordered pairs. Repeated adjacency entries count once;
+    * self-loops are skipped (the relational pass would count a loop
+    * toward both; the tree's simplified edges carry none). Each edge
+    * points from the lower to the higher (degree, index) rank, and a
+    * triangle is found once at its lowest-ranked node. */
+  def triangleTriads(g: Csr): (Long, Long) = {
+    val n = g.n
+    // distinct loop-free neighbor lists
+    val nOff = new Array[Int](n + 1)
+    val nAdj = new Array[Int](g.adj.length)
+    var v = 0
+    while (v < n) {
+      val s = g.off(v); val e = g.off(v + 1)
+      val ns = java.util.Arrays.copyOfRange(g.adj, s, e)
+      java.util.Arrays.sort(ns)
+      var k = nOff(v)
+      var j = 0
+      while (j < ns.length) {
+        if (ns(j) != v && (j == 0 || ns(j) != ns(j - 1))) { nAdj(k) = ns(j); k += 1 }
+        j += 1
+      }
+      nOff(v + 1) = k
+      v += 1
+    }
+    def deg(x: Int) = nOff(x + 1) - nOff(x)
+    def below(a: Int, b: Int) = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+    var triads = 0L
+    var tri = 0L
+    val mark = Array.fill(n)(-1)
+    v = 0
+    while (v < n) {
+      val d = deg(v).toLong
+      triads += d * (d - 1) / 2
+      var e = nOff(v)
+      while (e < nOff(v + 1)) {
+        if (below(v, nAdj(e))) mark(nAdj(e)) = v
+        e += 1
+      }
+      e = nOff(v)
+      while (e < nOff(v + 1)) {
+        val u = nAdj(e)
+        if (below(v, u)) {
+          var f = nOff(u)
+          while (f < nOff(u + 1)) {
+            val w = nAdj(f)
+            if (below(u, w) && mark(w) == v) tri += 1
+            f += 1
+          }
+        }
+        e += 1
+      }
+      v += 1
+    }
+    (tri, triads)
   }
 
   /** Exact diameter: max over components of the component diameter

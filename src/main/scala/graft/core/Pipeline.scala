@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** End-to-end dataset-build composition mirroring the reference's main
@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
   * (pipeline.sh GNU parallel) collapses into Spark partitioning; the
   * chr1-task special-casing (whole-genome stats computed only there)
   * disappears because the full-DF aggregates are computed once. At or
-  * below it the tree writer reads vertices and edges computed in the
-  * driver, as the reference's one R process does ([[ResidentBuild]]).
+  * below it the whole tree is written the way the reference's one R
+  * process writes it: the vertices and edges are computed in the
+  * driver ([[ResidentBuild]]) after one fetch job, and so is every
+  * tree file from them ([[writeDatasetTree]]'s driver route) — no
+  * Spark job after the fetch.
   */
 object Pipeline {
 
@@ -171,8 +174,9 @@ object Pipeline {
     * Per-chromosome documents keep every edge TOUCHING the chromosome
     * plus both endpoints (the F2 slice semantics) and are written with
     * elements sorted by id, so the tree is byte-deterministic under any
-    * partitioning. Documents are BATCH-STREAMED
-    * (CytoscapeJson.writeChromosomeDocuments): one tagged element plan
+    * partitioning. On the relational route documents are
+    * BATCH-STREAMED (CytoscapeJson.writeChromosomeDocuments): one
+    * tagged element plan
     * + one global sort for ALL chromosome documents, piped
     * partition-at-a-time to the files — document size never bounds
     * driver memory, only the files grow. `chromosomesToWrite` bounds
@@ -196,7 +200,21 @@ object Pipeline {
     * chromosomes_positions_checker.sh:9-27 guards), affordable at any
     * tree scale; "cose" runs the per-document force layout
     * (Layout.cosePerDoc — interactively-sized documents only, the
-    * reference's own enricher contract); None skips enrichment. */
+    * reference's own enricher contract); None skips enrichment.
+    *
+    * Two routes write the same bytes. When the dataset's `resident`
+    * form holds local frames ([[build]]'s cutoff) and `docLayout` is
+    * the grid or None, with the stream writer, the DRIVER ROUTE reads
+    * their rows once and computes every file in the driver, as the
+    * reference's one R process does: one symmetric [[LocalGraph.Csr]]
+    * for components, the exact diameter (the iFUB descent on driver
+    * threads) and the triangle/triad counts, [[ResidentTree]] for the
+    * A5/A9/A10 values, and the documents from the frames' own `to_json`
+    * (CytoscapeJson.writeChromosomeDocuments' local form). The features
+    * input is fetched beside the dataset's own fetch, so after the
+    * fetch the tree runs no Spark job. Every other input — above the
+    * cutoff, `docLayout = "cose"`, `distributedDocs = Some(true)` —
+    * takes the RELATIONAL fan-out below, the at-scale form. */
   def writeDatasetTree(dataset: BuiltDataset, outDir: String,
                        features: Option[DataFrame] = None,
                        nReplicates: Int = 3, seed: Long = 42L,
@@ -207,144 +225,234 @@ object Pipeline {
     import org.apache.spark.storage.StorageLevel
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    import scala.jdk.CollectionConverters._
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/chromosomes"))
-    val ds = dataset.resident
-    // the tree reads nodes/edges many times over (three iterative
-    // metadata passes, the randomization envelope, one document per
-    // chromosome): pin both once so every pass is a cache scan, not a
-    // re-run of the build lineage — at any scale the tree write is
-    // then O(passes · |dataset|) reads of a materialized frame. The
-    // symmetrized edge list is ALSO shared (CC + diameter both consume
-    // it), persisted here so the concurrent lanes below never race an
-    // unpersist against each other's scans.
-    // A local frame (the resident build's) is already computed: it is
-    // read in place, not pinned, and its rows are counted with no job.
-    val localEdges = Regime.localRows(ds.edges)
-    val localNodes = Regime.localRows(ds.nodes).isDefined
-    val edgesC = if (localEdges.isDefined) ds.edges
-      else ds.edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesC = if (localNodes) ds.nodes
-      else ds.nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    val sym = GraphOps.symmetrize(edgesC).persist(StorageLevel.MEMORY_AND_DISK)
     // per-lane wall-clock, recorded into [[lastTreeTimings]] (the s11
     // bench artifact's sub-component attribution — r13 verdict #3)
-    val timings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    def timed[T](lane: String)(f: => T): T = {
-      val s = System.nanoTime(); val r = f
-      timings.put(lane, (System.nanoTime() - s) / 1e9)
-      r
-    }
+    val timings = new Timings()
+    def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
     // the passes are independent until the final JSON assembly — run
-    // them as concurrent job lanes on the shared session. Iterative
-    // lanes (CC, BFS sweeps, the swap chain) leave most cores idle
-    // between their narrow stages; overlapping them fills the gaps, so
-    // the tree costs ~max(lane) instead of Σ(lane). On a cluster the
-    // same shape overlaps scheduler round-trips.
+    // them as concurrent lanes. Iterative relational lanes (CC, BFS
+    // sweeps, the swap chain) leave most cores idle between their
+    // narrow stages; overlapping them fills the gaps, so the tree costs
+    // ~max(lane) instead of Σ(lane). On a cluster the same shape
+    // overlaps scheduler round-trips.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      // materialize a pinned EDGE cache once before the fan-out (it
-      // underlies sym and most lanes, and its row count routes the
-      // document writer). Every lane runs at the session's own shuffle
-      // width — no lane writes session conf, so the concurrent lanes
-      // share the session without racing on it. The sym cache
-      // materializes INSIDE the lanes that first touch it (concurrent
-      // first readers of one cached partition block on the computing
-      // thread, they don't recompute).
-      val nEdges = localEdges.getOrElse(edgesC.count())
-      // materialize a pinned NODES cache before the fan-out too: four
-      // lanes (graphMetadata, suggestions, chromosomes, documents) block
-      // on it, and under the concurrent region the annotated-vertex
-      // build interleaves with every other lane's stages — measured
-      // ~18 s of lane wall-clock vs ~2 s when it runs with the whole
-      // box here
-      if (!localNodes) timed("nodesCache") { nodesC.count() }
-      val fSym = Future(timed("symmetrize") { sym.count() })
-      val fCs = fSym.map(nSym => timed("componentStats") {
-        GraphOps.componentStatsSym(sym, nSym).collect()(0) })
-      val fD = fSym.map(nSym => timed("diameter") {
-        GraphOps.diameterCertifiedSym(sym, nSym).collect()(0) })
-      val fT = Future(timed("transitivity") {
-        GraphOps.transitivity(edgesC).collect()(0) })
-      val fGm = Future(timed("graphMetadata") {
-        ds.graphMetadata.collect()(0) })
-      val fSugg = Future(timed("suggestions") {
-        MetadataJson.stringArrayJson(ds.suggestions) })
-      val fChrs = Future(timed("chromosomes") {
-        ds.chromosomes.collect().map(_.getString(0)).toSeq })
-      // the edge count is at hand: an edge set over the driver cutoff
-      // takes the relational statistics without a fetch attempt
-      val fFeat = features.map(f => Future(timed("featuresMetadata") {
-        MetadataJson.featuresMetadataJson(
-          Chas.featuresMetadataSubnets(edgesC, f, nReplicates, seed,
-            residentMaxEdges =
-              if (nEdges > Regime.ResidentMaxEdges) 0L
-              else Regime.ResidentMaxEdges)) }))
-      // documents wait only on the chromosome list, not the other lanes
-      val fDocs = fChrs.map { all =>
-        timed("chromosomeDocs") {
-          val chrs = chromosomesToWrite.getOrElse(all)
-          val positions: CytoscapeJson.DocPositions = docLayout match {
-            case None => CytoscapeJson.NoPositions
-            case Some("grid") =>
-              // derives inside the writer from its own membership
-              // frame — no second membership pass, no positions join
-              CytoscapeJson.InlineGridPositions()
-            case Some("cose") =>
-              CytoscapeJson.FramePositions(
-                Layout.cosePerDoc(CytoscapeJson.docMembers(edgesC),
-                  edgesC.select(explode(array_distinct(array(
-                      split(col("src"), "_").getItem(0),
-                      split(col("dst"), "_").getItem(0)))).as("doc"),
-                    col("src"), col("dst"))))
-            case Some(other) =>
-              throw new IllegalArgumentException(s"docLayout: $other")
+      val driverEligible =
+        docLayout.forall(_ == "grid") && !distributedDocs.contains(true)
+      // the features fetch runs beside the dataset's: (frame, the
+      // statistics' cutoff) — local rows, or the input itself when it
+      // is over the cutoff (the statistics then skip a second attempt)
+      val fFeatIn = features.map { f =>
+        if (!driverEligible) Future.successful((f, Regime.ResidentMaxEdges))
+        else Future {
+          val in = f.select("fragment", "feature", "value")
+          Regime.collectAtMost(Regime.ResidentMaxEdges, in) match {
+            case Some(Seq(rows)) =>
+              (f.sparkSession.createDataFrame(rows.toSeq.asJava, in.schema),
+                Regime.ResidentMaxEdges)
+            case _ => (f, 0L)
           }
-          if (distributedDocs.getOrElse(nEdges > DocStreamMaxEdges))
-            CytoscapeJson.writeChromosomeDocumentLines(nodesC, edgesC, chrs,
-              s"$outDir/chromosomes", positions)
-          else
-            CytoscapeJson.writeChromosomeDocuments(nodesC, edgesC, chrs,
-              s"$outDir/chromosomes", positions)
         }
       }
+      val ds = dataset.resident
+      // A local frame (the resident build's) is already computed: it is
+      // read in place, not pinned, and its rows are counted with no job.
+      val localEdges = Regime.localRows(ds.edges)
+      val localNodes = Regime.localRows(ds.nodes).isDefined
+      val driver = driverEligible && localEdges.isDefined && localNodes
+      // the relational route reads nodes/edges many times over (three
+      // iterative metadata passes, the randomization envelope, one
+      // document per chromosome): pin both once so every pass is a
+      // cache scan, not a re-run of the build lineage. The EDGE cache
+      // materializes before the fan-out (it underlies most lanes, and
+      // its row count routes the document writer); so does the NODES
+      // cache — four lanes block on it, and under the concurrent region
+      // the annotated-vertex build interleaves with every other lane's
+      // stages (measured ~18 s of lane wall-clock vs ~2 s when it runs
+      // with the whole box here).
+      val edgesC = if (localEdges.isDefined) ds.edges
+        else ds.edges.persist(StorageLevel.MEMORY_AND_DISK)
+      val nodesC = if (localNodes) ds.nodes
+        else ds.nodes.persist(StorageLevel.MEMORY_AND_DISK)
+      // the symmetrized edge list is shared (CC + diameter both consume
+      // it), persisted here so the concurrent lanes never race an
+      // unpersist against each other's scans
+      val sym = if (driver) None
+        else Some(GraphOps.symmetrize(edgesC).persist(StorageLevel.MEMORY_AND_DISK))
+      try {
+        val nEdges = localEdges.getOrElse(edgesC.count())
+        if (!localNodes) timings("nodesCache") { nodesC.count() }
+        val lanes = sym.fold(residentLanes(ds, timings))(
+          relationalLanes(ds, edgesC, _, outDir, timings))
+        // the edge count is at hand: an edge set over the driver cutoff
+        // takes the relational statistics without a fetch attempt
+        val fFeat = fFeatIn.map(_.map { case (f, cut) =>
+          timings("featuresMetadata") {
+            MetadataJson.featuresMetadataJson(
+              Chas.featuresMetadataSubnets(edgesC, f, nReplicates, seed,
+                residentMaxEdges =
+                  if (nEdges > Regime.ResidentMaxEdges) 0L else cut))
+          }
+        })
+        // documents wait only on the chromosome list, not the other lanes
+        val fDocs = lanes.chromosomes.map { all =>
+          timings("chromosomeDocs") {
+            val chrs = chromosomesToWrite.getOrElse(all)
+            val positions = docPositions(docLayout, edgesC)
+            if (distributedDocs.getOrElse(nEdges > DocStreamMaxEdges))
+              CytoscapeJson.writeChromosomeDocumentLines(nodesC, edgesC, chrs,
+                s"$outDir/chromosomes", positions)
+            else
+              CytoscapeJson.writeChromosomeDocuments(nodesC, edgesC, chrs,
+                s"$outDir/chromosomes", positions)
+          }
+        }
 
-      val cs = Await.result(fCs, Duration.Inf)
-      val dRow = Await.result(fD, Duration.Inf)
-      // the certified path is exact in every regime since the
-      // distributed iFUB escalation replaced the size refusal; this
-      // surfacing stays as a safety net on the `exact` contract
-      if (!dRow.getBoolean(dRow.fieldIndex("exact")))
-        System.err.println(s"[graft] writeDatasetTree($outDir): diameter " +
-          s"${dRow.getLong(0)} is an UNCERTIFIED lower bound (graph over " +
-          "the exact-BFS escalation cap); metadata.json carries it as-is")
-      val tRow = Await.result(fT, Duration.Inf)
-      MetadataJson.write(s"$outDir/metadata.json",
-        MetadataJson.metadataJson(Await.result(fGm, Duration.Inf),
-          components = cs.getLong(0), maxComponentPct = cs.getString(1),
-          diameter = dRow.getLong(0),
-          transitivity = tRow.getDouble(tRow.fieldIndex("transitivity"))))
-      MetadataJson.write(s"$outDir/suggestions.json",
-        Await.result(fSugg, Duration.Inf))
-      MetadataJson.write(s"$outDir/chromosomes.json",
-        MetadataJson.stringArrayJson(Await.result(fChrs, Duration.Inf)))
-      fFeat.foreach(f => MetadataJson.write(s"$outDir/features_metadata.json",
-        Await.result(f, Duration.Inf)))
-      Await.result(fDocs, Duration.Inf)
+        val (components, maxComponentPct) = await(lanes.components)
+        MetadataJson.write(s"$outDir/metadata.json",
+          MetadataJson.metadataJson(await(lanes.graphMetadata),
+            components = components, maxComponentPct = maxComponentPct,
+            diameter = await(lanes.diameter),
+            transitivity = await(lanes.transitivity)))
+        MetadataJson.write(s"$outDir/suggestions.json",
+          MetadataJson.stringArrayJson(await(lanes.suggestions)))
+        MetadataJson.write(s"$outDir/chromosomes.json",
+          MetadataJson.stringArrayJson(await(lanes.chromosomes)))
+        fFeat.foreach(f =>
+          MetadataJson.write(s"$outDir/features_metadata.json", await(f)))
+        await(fDocs)
+      } finally {
+        sym.foreach(_.unpersist(blocking = false))
+        if (localEdges.isEmpty) edgesC.unpersist(blocking = false)
+        if (!localNodes) nodesC.unpersist(blocking = false)
+      }
     } finally {
       pool.shutdown()
-      sym.unpersist(blocking = false)
-      if (localEdges.isEmpty) edgesC.unpersist(blocking = false)
-      if (!localNodes) nodesC.unpersist(blocking = false)
       // publish the run's sub-component timings for the bench artifact;
       // chromosomeDocsWrite is the stream writer's pure file-IO time
       // (the render-vs-write split inside the chromosomeDocs lane —
       // zero when the distributed writer ran, whose IO is executor-side)
-      import scala.jdk.CollectionConverters._
       lastTreeTimings = timings.asScala.toMap +
         ("chromosomeDocsWrite" ->
           graft.io.CytoscapeJson.lastStreamWriteIoSec)
+    }
+  }
+
+  /** A tree write's metadata passes, each a concurrent lane: (component
+    * count, largest-component share), the exact diameter, the
+    * transitivity, the A5 row, the suggestions and the chromosome
+    * list. */
+  private final case class TreeLanes(
+      components: scala.concurrent.Future[(Long, String)],
+      diameter: scala.concurrent.Future[Long],
+      transitivity: scala.concurrent.Future[Double],
+      graphMetadata: scala.concurrent.Future[Row],
+      suggestions: scala.concurrent.Future[Seq[String]],
+      chromosomes: scala.concurrent.Future[Seq[String]])
+
+  /** Per-lane wall-clock seconds, written by concurrent lanes. */
+  private final class Timings
+      extends java.util.concurrent.ConcurrentHashMap[String, Double] {
+    def apply[T](lane: String)(f: => T): T = {
+      val s = System.nanoTime(); val r = f
+      put(lane, (System.nanoTime() - s) / 1e9)
+      r
+    }
+  }
+
+  /** The driver route's lanes over a resident dataset's local frames:
+    * the columns they read, taken from the frames' rows in place (no
+    * job), one symmetric CSR for the three graph passes, and
+    * [[ResidentTree]] for the rest. */
+  private def residentLanes(ds: BuiltDataset, lane: Timings)(
+      implicit ec: scala.concurrent.ExecutionContext): TreeLanes = {
+    import scala.concurrent.Future
+    val Array(src, dst, edgeType) =
+      Regime.localStrings(ds.edges, col("src"), col("dst"), col("type"))
+    val Array(nodeType, names, chr) =
+      Regime.localStrings(ds.nodes, col("type"), col("gene_names"), col("chr"))
+    val fG = Future(lane("symmetrize") {
+      LocalGraph.build(src.indices.iterator.flatMap(i =>
+        Iterator((src(i), dst(i)), (dst(i), src(i)))))
+    })
+    TreeLanes(
+      fG.map(g => lane("componentStats") {
+        val (n, largest, total) = LocalGraph.componentStats(g)
+        (n, ResidentTree.maxComponentPct(largest, total))
+      }),
+      fG.map(g => lane("diameter") { LocalGraph.diameterDriver(g) }),
+      fG.map(g => lane("transitivity") {
+        val (triangles, triads) = LocalGraph.triangleTriads(g)
+        ResidentTree.transitivity(triangles, triads)
+      }),
+      Future(lane("graphMetadata") {
+        ResidentTree.graphMetadata(nodeType, src, dst, edgeType) }),
+      Future(lane("suggestions") {
+        ResidentTree.suggestions(names) }),
+      Future(lane("chromosomes") {
+        ResidentTree.chromosomes(chr) }))
+  }
+
+  /** The relational route's lanes: Spark plans over the pinned edges,
+    * the shared symmetrized frame `sym` and the dataset's members. */
+  private def relationalLanes(ds: BuiltDataset, edges: DataFrame,
+                              sym: DataFrame, outDir: String, lane: Timings)(
+      implicit ec: scala.concurrent.ExecutionContext): TreeLanes = {
+    import scala.concurrent.Future
+    // the sym cache materializes INSIDE the lanes that first touch it
+    // (concurrent first readers of one cached partition block on the
+    // computing thread, they don't recompute)
+    val fSym = Future(lane("symmetrize") { sym.count() })
+    TreeLanes(
+      fSym.map(nSym => lane("componentStats") {
+        val r = GraphOps.componentStatsSym(sym, nSym).collect()(0)
+        (r.getLong(0), r.getString(1))
+      }),
+      fSym.map(nSym => lane("diameter") {
+        val r = GraphOps.diameterCertifiedSym(sym, nSym).collect()(0)
+        // the certified path is exact in every regime since the
+        // distributed iFUB escalation replaced the size refusal; this
+        // surfacing stays as a safety net on the `exact` contract
+        if (!r.getBoolean(r.fieldIndex("exact")))
+          System.err.println(s"[graft] writeDatasetTree($outDir): diameter " +
+            s"${r.getLong(0)} is an UNCERTIFIED lower bound (graph over " +
+            "the exact-BFS escalation cap); metadata.json carries it as-is")
+        r.getLong(0)
+      }),
+      Future(lane("transitivity") {
+        val r = GraphOps.transitivity(edges).collect()(0)
+        r.getDouble(r.fieldIndex("transitivity"))
+      }),
+      Future(lane("graphMetadata") { ds.graphMetadata.collect()(0) }),
+      Future(lane("suggestions") {
+        ds.suggestions.collect().map(_.getString(0)).toSeq }),
+      Future(lane("chromosomes") {
+        ds.chromosomes.collect().map(_.getString(0)).toSeq }))
+  }
+
+  /** The document writers' position source for `docLayout` (see
+    * [[writeDatasetTree]]); "cose" lays out the documents of `edges`. */
+  private def docPositions(docLayout: Option[String], edges: DataFrame)
+      : graft.io.CytoscapeJson.DocPositions = {
+    import graft.io.CytoscapeJson
+    def chrOf(c: org.apache.spark.sql.Column) = split(c, "_").getItem(0)
+    docLayout match {
+      case None => CytoscapeJson.NoPositions
+      // derives inside the writer from its own membership — no second
+      // membership pass, no positions join
+      case Some("grid") => CytoscapeJson.InlineGridPositions()
+      case Some("cose") =>
+        CytoscapeJson.FramePositions(
+          Layout.cosePerDoc(CytoscapeJson.docMembers(edges),
+            edges.select(explode(array_distinct(array(
+                chrOf(col("src")), chrOf(col("dst"))))).as("doc"),
+              col("src"), col("dst"))))
+      case Some(other) =>
+        throw new IllegalArgumentException(s"docLayout: $other")
     }
   }
 
@@ -371,7 +479,10 @@ object Pipeline {
     * not the dataset. Output bytes are IDENTICAL to what a full
     * [[writeDatasetTree]] writes for those documents (per-document
     * layouts depend only on the document's own members/edges —
-    * asserted byte-for-byte in PipelineTreeSpec). */
+    * asserted byte-for-byte in PipelineTreeSpec). A resident dataset
+    * (local frames) with the grid or no layout and the stream writer
+    * writes the requested documents in the driver with no job, as the
+    * tree's driver route does. */
   def refreshChromosomeDocs(dataset: BuiltDataset, outDir: String,
                             chrs: Seq[String],
                             distributedDocs: Option[Boolean] = None,
@@ -381,6 +492,27 @@ object Pipeline {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$outDir/chromosomes"))
     val ds = dataset.resident
+    // regime default: FOLLOW THE STANDING TREE'S PHYSICAL FORM
+    // before sizing the delta — writeDatasetTree routes on the
+    // full-dataset edge count, so a tree built by the distributed
+    // writer has chr<c>.json DIRECTORIES, and a delta refresh that
+    // routed on its own (small) working set would replace one with a
+    // single stream-written FILE. Both forms read back identically
+    // (the logical-listing contract), but a silently mixed layout
+    // surprises downstream tooling; explicit `distributedDocs`
+    // still overrides.
+    val standingDistributed = chrs.exists { c =>
+      java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(s"$outDir/chromosomes/chr$c.json")) }
+    if (docLayout.forall(_ == "grid") &&
+        !distributedDocs.getOrElse(standingDistributed) &&
+        Regime.localRows(ds.edges).isDefined &&
+        Regime.localRows(ds.nodes).isDefined) {
+      // the driver writer reads only the requested documents' edges
+      CytoscapeJson.writeChromosomeDocuments(ds.nodes, ds.edges, chrs,
+        s"$outDir/chromosomes", docPositions(docLayout, ds.edges))
+      return
+    }
     def chrOf(c: org.apache.spark.sql.Column) = split(c, "_").getItem(0)
     // read twice below (count for the regime route + the write) and
     // up to twice more for positions: pin the narrowed set once
@@ -389,30 +521,7 @@ object Pipeline {
               chrOf(col("dst")).isin(chrs: _*))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val positions: CytoscapeJson.DocPositions = docLayout match {
-        case None => CytoscapeJson.NoPositions
-        case Some("grid") => CytoscapeJson.InlineGridPositions()
-        case Some("cose") =>
-          CytoscapeJson.FramePositions(
-            Layout.cosePerDoc(CytoscapeJson.docMembers(edgesT),
-              edgesT.select(explode(array_distinct(array(
-                  chrOf(col("src")), chrOf(col("dst"))))).as("doc"),
-                col("src"), col("dst"))))
-        case Some(other) =>
-          throw new IllegalArgumentException(s"docLayout: $other")
-      }
-      // regime default: FOLLOW THE STANDING TREE'S PHYSICAL FORM
-      // before sizing the delta — writeDatasetTree routes on the
-      // full-dataset edge count, so a tree built by the distributed
-      // writer has chr<c>.json DIRECTORIES, and a delta refresh that
-      // routed on its own (small) working set would replace one with a
-      // single stream-written FILE. Both forms read back identically
-      // (the logical-listing contract), but a silently mixed layout
-      // surprises downstream tooling; explicit `distributedDocs`
-      // still overrides.
-      val standingDistributed = chrs.exists { c =>
-        java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(s"$outDir/chromosomes/chr$c.json")) }
+      val positions = docPositions(docLayout, edgesT)
       if (distributedDocs.getOrElse(
             standingDistributed || edgesT.count() > DocStreamMaxEdges))
         CytoscapeJson.writeChromosomeDocumentLines(ds.nodes, edgesT, chrs,

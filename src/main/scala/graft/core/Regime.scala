@@ -1,10 +1,11 @@
 package graft.core
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.unsafe.Platform
 
 /** Scale-aware regime dispatch (r13 verdict #2).
@@ -47,8 +48,11 @@ import org.apache.spark.unsafe.Platform
   *                                  form, which the tree writer reads,
   *                                  computes the vertices and edges in
   *                                  the driver ([[ResidentBuild]]) as
-  *                                  local frames; above it the lazy
-  *                                  relational plans
+  *                                  local frames, and the tree writer
+  *                                  computes every tree file from them
+  *                                  in the driver (grid or no layout);
+  *                                  above it the lazy relational plans
+  *                                  and the relational tree lanes
   *   - a17       Chas.featuresMetadataSubnets  `residentMaxEdges`
   *                                  (edge rows and feature rows, each;
   *                                  no distance match): at or below it
@@ -87,7 +91,12 @@ object Regime {
     * have at most this many rows (the fetch, the kernel and the local
     * frames took 3.3–4.4 s against 9.0–10.5 s to pin and count the
     * relational nodes and edges at sf0.1's 276k working rows, 6.1–6.4 s
-    * against 11.0–12.1 s at 497k; warm session, 4-core host), and
+    * against 11.0–12.1 s at 497k; warm session, 4-core host),
+    * [[Pipeline.writeDatasetTree]] writes every tree file from that
+    * form in the driver (build and tree with features and all four
+    * annotation tables, warm session, 4-core host: 11.7–15.1 s against
+    * 29.4–36.9 s over the relational lanes at 274k edges, 12.7–14.7 s
+    * against 57.1–59.1 s at 490k; byte-identical trees), and
     * [[Chas.aggregateOntoFragments]] below its own measured
     * crossover. The value is ~3x the reference's largest dataset (Human
     * Monocyte, 171k edges / 96k nodes; BASELINE.md). The serving copy measured 10.6 MB (Spark's
@@ -191,10 +200,45 @@ object Regime {
     * `LocalRelation`, as `createDataFrame` over rows gives), read with
     * no job; None for a planned frame. */
   def localRows(df: DataFrame): Option[Long] =
+    localData(df).map(_.length.toLong)
+
+  /** A local frame's rows as its plan holds them (Catalyst rows in the
+    * frame's own columns), read in place: no job and no new plan — a
+    * plan over a large local frame walks its rows in every optimizer
+    * rule (~2 s per plan at 490k rows). None for a planned frame. */
+  private def localData(df: DataFrame): Option[Seq[InternalRow]] =
     df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l.data.length.toLong)
+      case l: LocalRelation => Some(l.data)
       case _ => None
     }
+
+  /** The string columns `cols` of the local frame `df`, one array per
+    * column (null stays null), evaluated over its rows in place: the
+    * columns are planned once over an EMPTY frame of `df`'s schema
+    * (Spark's own expressions, analyzed and runtime-replaced as the
+    * optimizer would) and projected over [[localData]]'s rows, so the
+    * cost is per row, not per optimizer rule × row. */
+  def localStrings(df: DataFrame, cols: Column*): Array[Array[String]] = {
+    val data = localData(df).getOrElse(
+      throw new IllegalArgumentException("localStrings: not a local frame"))
+    val empty = df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](), df.schema)
+    ReplaceExpressions(empty.select(cols: _*).queryExecution.analyzed) match {
+      case Project(list, child) =>
+        val project = UnsafeProjection.create(list, child.output)
+        val out = Array.fill(cols.length)(new Array[String](data.length))
+        var i = 0
+        for (row <- data) {
+          val r = project(row)
+          for (c <- cols.indices if !r.isNullAt(c))
+            out(c)(i) = r.getUTF8String(c).toString
+          i += 1
+        }
+        out
+      case other =>
+        throw new IllegalStateException(s"localStrings: unexpected plan $other")
+    }
+  }
 
   /** Catalyst's estimated size of the frame in bytes — read from the
     * optimized logical plan's statistics; never launches a job. */

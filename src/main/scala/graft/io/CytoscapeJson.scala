@@ -171,18 +171,6 @@ object CytoscapeJson {
     } finally out.close()
   }
 
-  /** ALL per-chromosome documents in ONE plan: every edge is exploded
-    * to the chromosome documents it touches (both-endpoint semantics of
-    * the F2 slice), node membership derives from the tagged edges, and
-    * a single global sort by (document, group, id) feeds ONE
-    * partition-at-a-time driver stream that switches output files as
-    * the document key changes. Byte-identical per file to
-    * [[writeDocument]] — but 25 documents cost one shuffle + one sort
-    * instead of 25 small plans (measured 7x faster on the sf0.1 tree).
-    * Documents listed in `chrs` that no edge touches (e.g. the PP
-    * pseudo-chromosome) are written as the "{}" guard, as is any
-    * document with fewer than two node elements ([[render]]'s
-    * contract — a lone node plus self-loop edges still guards). */
   /** The one-plan tagged element set behind both all-chromosome
     * writers: every edge exploded to the chromosome documents it
     * touches (both-endpoint F2 semantics), node membership derived
@@ -329,14 +317,130 @@ object CytoscapeJson {
       }
   }
 
+  /** ALL per-chromosome documents in ONE plan: every edge is exploded
+    * to the chromosome documents it touches (both-endpoint semantics of
+    * the F2 slice), node membership derives from the tagged edges, and
+    * a single global sort by (document, group, id) feeds ONE
+    * partition-at-a-time driver stream that switches output files as
+    * the document key changes. Byte-identical per file to
+    * [[writeDocument]] — but 25 documents cost one shuffle + one sort
+    * instead of 25 small plans (measured 7x faster on the sf0.1 tree).
+    * Documents listed in `chrs` that no edge touches (e.g. the PP
+    * pseudo-chromosome) are written as the "{}" guard, as is any
+    * document with fewer than two node elements ([[render]]'s
+    * contract — a lone node plus self-loop edges still guards).
+    *
+    * Local frames (the resident build's) with the grid or no layout
+    * skip the plan: the same elements come from
+    * [[residentDocElements]], in the driver with no job. Both forms
+    * feed one file loop ([[streamDocuments]]). */
   def writeChromosomeDocuments(nodes: DataFrame, edges: DataFrame,
                                chrs: Seq[String], dir: String,
                                positions: DocPositions = NoPositions): Unit = {
-    // only the requested documents (callers may bound the fan-out)
-    val sorted = taggedDocElements(nodes, edges, positions)._1
-      .filter(col("__doc").isin(chrs: _*))
-      .orderBy("__doc", "__g", "__k1", "__k2")
+    val resident = !positions.isInstanceOf[FramePositions] &&
+      graft.core.Regime.localRows(nodes).isDefined &&
+      graft.core.Regime.localRows(edges).isDefined
+    if (resident)
+      streamDocuments(residentDocElements(nodes, edges, chrs, positions),
+        chrs, dir)
+    else {
+      // only the requested documents (callers may bound the fan-out)
+      val sorted = taggedDocElements(nodes, edges, positions)._1
+        .filter(col("__doc").isin(chrs: _*))
+        .orderBy("__doc", "__g", "__k1", "__k2")
+      val it = new PrefetchedRows(sorted, ahead = 2)
+      // cancel any still-in-flight prefetch jobs on abort
+      try streamDocuments(
+        it.map(r => (r.getString(0), r.getInt(1) == 0, r.getString(4))),
+        chrs, dir)
+      finally it.close()
+    }
+  }
 
+  /** [[taggedDocElements]]' requested elements in the writer's order,
+    * computed in the driver from two local frames: the node and edge
+    * JSON is Spark's own `to_json` over their rows
+    * ([[graft.core.Regime.localStrings]], no job), and the rest is the
+    * relational plan's, step for step — an edge tags the distinct
+    * chromosomes of its two ids ([[graft.core.ResidentTree.chrOf]]); a
+    * document's members are its edges' endpoints; the
+    * grid places member j of n (binary id order, endpoints without a
+    * node row included) at ((j mod c + 1)·s, ((j − j mod c)/c + 1)·s)
+    * for c = ⌈√n⌉, the y term in double arithmetic as the plan's `/`;
+    * elements sort by (document, nodes first, id) and edges by
+    * (src, dst), binary string order throughout — here as int ranks:
+    * every id is ranked once, a document's members are a bit set over
+    * the ranks, and the edges are bucketed by source rank and sorted by
+    * target rank within a bucket. */
+  private def residentDocElements(nodes: DataFrame, edges: DataFrame,
+                                  chrs: Seq[String], positions: DocPositions)
+      : Iterator[(String, Boolean, String)] = {
+    import graft.core.Regime.localStrings
+    val Array(frag, nodeEl) =
+      localStrings(nodes, col("fragment"), to_json(nodeStruct(nodes)))
+    val Array(src, dst, edgeEl) =
+      localStrings(edges, col("src"), col("dst"), to_json(edgeStruct(edges)))
+    val ids = (frag ++ src ++ dst).distinct
+      .sortWith(graft.core.LocalChain.bcmp(_, _) < 0)
+    val rank = new java.util.HashMap[String, Integer](ids.length * 2)
+    ids.indices.foreach(i => rank.put(ids(i), i))
+    val nodeJson = new Array[String](ids.length)
+    frag.indices.foreach(i => nodeJson(rank.get(frag(i))) = nodeEl(i))
+    val rs = src.map(rank.get(_).intValue)
+    val rd = dst.map(rank.get(_).intValue)
+    // edges in (src, dst) order: bucketed by source rank, each bucket
+    // sorted as (target rank, edge) longs
+    val start = new Array[Int](ids.length + 1)
+    rs.foreach(v => start(v + 1) += 1)
+    for (v <- ids.indices) start(v + 1) += start(v)
+    val fill = start.clone()
+    val sorted = new Array[Long](src.length)
+    for (i <- src.indices) {
+      sorted(fill(rs(i))) = (rd(i).toLong << 32) | i; fill(rs(i)) += 1
+    }
+    for (v <- ids.indices) java.util.Arrays.sort(sorted, start(v), start(v + 1))
+    import graft.core.ResidentTree.chrOf
+    val wanted = chrs.toSet
+    val members = scala.collection.mutable.HashMap.empty[String, java.util.BitSet]
+    val docEdges = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
+    for (k <- sorted) {
+      val i = (k & 0xffffffffL).toInt
+      for (doc <- Set(chrOf(src(i)), chrOf(dst(i))) if wanted(doc)) {
+        val m = members.getOrElseUpdate(doc, new java.util.BitSet(ids.length))
+        m.set(rs(i)); m.set(rd(i))
+        docEdges.getOrElseUpdate(doc, scala.collection.mutable.ArrayBuffer.empty) +=
+          edgeEl(i)
+      }
+    }
+    members.keys.toSeq.sortWith(graft.core.LocalChain.bcmp(_, _) < 0).iterator
+      .flatMap { doc =>
+        val m = members(doc)
+        val c = math.ceil(math.sqrt(m.cardinality.toDouble)).toLong
+        val nodeEls = m.stream().toArray.iterator.zipWithIndex.flatMap {
+          case (v, j) => Option(nodeJson(v)).map { el =>
+            positions match {
+              case InlineGridPositions(spacing) =>
+                val x = (j % c + 1L) * spacing
+                val y = (((j - j % c).toDouble / c + 1.0) * spacing).toLong
+                el.substring(0, el.length - 1) +
+                  s""","position":{"x":$x,"y":$y}}"""
+              case _ => el
+            }
+          }
+        }
+        nodeEls.map((doc, true, _)) ++ docEdges(doc).iterator.map((doc, false, _))
+      }
+  }
+
+  /** The document file loop behind both writer forms: `elements` are
+    * (document, is-node, JSON) in document order, each document's
+    * elements together, nodes first. Every requested document starts as
+    * the "{}" guard; a document with fewer than two node elements keeps
+    * it ([[render]]'s contract — a lone node plus self-loop edges still
+    * guards). */
+  private def streamDocuments(elements: Iterator[(String, Boolean, String)],
+                              chrs: Seq[String], dir: String): Unit = {
     def path(c: String) = java.nio.file.Paths.get(s"$dir/chr$c.json")
     // IO-vs-render attribution (r13 verdict #3): every byte reaches
     // the file through one TimedWriter per document, whose underlying
@@ -376,18 +480,14 @@ object CytoscapeJson {
       if (out != null) { out.write("]"); out.close(); out = null }
       held = null // a lone held element leaves the "{}" guard in place
     }
-    val it = new PrefetchedRows(sorted, ahead = 2)
     try {
-      while (it.hasNext) {
-        val r = it.next()
-        val (doc, isNode, el) = (r.getString(0), r.getInt(1) == 0,
-          r.getString(4))
+      for ((doc, isNode, el) <- elements) {
         if (doc != cur) {
           // render's contract: a document needs >=2 NODES. Nodes sort
-          // first (__g=0), so the first two elements decide: anything
-          // else (lone node + self-loop edges, or edges with no node
-          // rows) keeps the pre-written "{}" guard and swallows the
-          // rest of the document.
+          // first, so the first two elements decide: anything else
+          // (lone node + self-loop edges, or edges with no node rows)
+          // keeps the pre-written "{}" guard and swallows the rest of
+          // the document.
           closeDoc(); cur = doc
           skipDoc = !isNode; held = if (isNode) el else null
         } else if (skipDoc) ()
@@ -402,7 +502,6 @@ object CytoscapeJson {
       }
       closeDoc()
     } finally {
-      it.close() // cancel any still-in-flight prefetch jobs on abort
       if (out != null) out.close()
       lastStreamWriteIoSec = ioNanos / 1e9
     }
